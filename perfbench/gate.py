@@ -109,16 +109,6 @@ def expected(store: str, manifest: dict, route: str, params: dict):
         )
         rows = _duck(build(paths, s, e))
         return _to_fahrenheit([r for r in rows if r["station_id"] in ids])
-    if route == "/stations/forecasts":
-        paths = _files(store, manifest, "forecasts", start, end)
-        rows = _duck(
-            ref.forecasts_data_sql(
-                paths, s, e,
-                _utc_z(params["generated_start"]),
-                _utc_z(params["generated_end"]),
-            )
-        )
-        return _to_fahrenheit([r for r in rows if r["station_id"] in ids])
     raise ValueError(f"no reference for {route}")
 
 

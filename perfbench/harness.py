@@ -202,13 +202,16 @@ def closed_loop(port: int, n_clients: int, make_spec, stop: threading.Event,
                 rec: Recorder, validate, prefix: str = "") -> None:
     """Run n clients until `stop` is set; each sends its next request when
     the previous one completes. make_spec(client, i) returns an object with
-    method/path/kind/body; validate(spec, result) -> problem or None.
-    Request ids are `{prefix}c{client}-{i}`."""
+    method/path/kind/body, or None when the client has no more to send;
+    validate(spec, result) -> problem or None. Request ids are
+    `{prefix}c{client}-{i}`."""
 
     def client(c: int) -> None:
         i = 0
         while not stop.is_set():
             s = make_spec(c, i)
+            if s is None:
+                return
             r = call(port, s.method, s.path, s.kind, f"{prefix}c{c}-{i}", s.body)
             rec.add(r, validate(s, r) if r.ok else None)
             i += 1

@@ -12,6 +12,8 @@ from __future__ import annotations
 import json
 from collections import defaultdict
 
+from harness import latency_stats, quantile
+
 LAYER_OF = {
     "http_service.handler": "http_service.handler",
     "http_service.encode": "http_service.encode",
@@ -90,9 +92,12 @@ def load(paths: list[str]) -> tuple[list[dict], dict]:
 
 
 def summarize(spans: list[dict], requests: dict, primary: list,
-              untraced_p50: float, traced_p50: float) -> tuple[dict, str]:
-    """(per-layer metrics, self-time table). `primary` holds the client
-    results of the traced phase's primary requests."""
+              untraced: list) -> tuple[dict, str]:
+    """(per-layer metrics, self-time table). `primary` and `untraced` hold
+    the client results of the traced and the untraced side, which sent the
+    same slots of the schedule."""
+    traced_p50 = latency_stats(primary, 50, 0.0)["p50_s"]
+    untraced_p50 = latency_stats(untraced, 50, 0.0)["p50_s"]
     by_id = {s["id"]: s for s in spans}
     kids = defaultdict(list)
     for s in spans:
@@ -129,6 +134,7 @@ def summarize(spans: list[dict], requests: dict, primary: list,
             "rid": h["rid"],
             "layers": layers,
             "latency": latency[h["rid"]],
+            "tracer_s": requests.get(h["rid"], {}).get("tracer_s", 0.0),
             "response_bytes": h["attrs"].get("response_bytes", 0),
             "list_calls": sum(1 for s in tree if s["name"] == "sources.catalog.list"),
             "files_selected": total("sources.catalog.list", "files_selected"),
@@ -200,11 +206,19 @@ def summarize(spans: list[dict], requests: dict, primary: list,
             traced_p50 / untraced_p50 - 1.0 if untraced_p50 > 0 else 0.0
         ),
     }
-    return m, _table(per_req, spans, untraced_p50, traced_p50)
+    return m, _table(per_req, spans, untraced, untraced_p50, traced_p50)
 
 
-def _table(per_req: list, spans: list, untraced_p50: float,
+def _gap(a: float, b: float) -> str:
+    return f"{a / b - 1:+.1%}" if b else "n/a"
+
+
+def _table(per_req: list, spans: list, untraced: list, untraced_p50: float,
            traced_p50: float) -> str:
+    """Mean self time per layer over the traced requests. Their sum is the
+    mean traced latency by construction (wait_s is the remainder), so the
+    check is against the untraced side: the blocking path less the
+    tracer's measured bookkeeping should match it."""
     primary = {r["rid"] for r in per_req}
     names = sorted({k for r in per_req for k in r["layers"]})
     n = max(len(per_req), 1)
@@ -217,11 +231,22 @@ def _table(per_req: list, spans: list, untraced_p50: float,
         blocking += v
         share = v / mean_lat if mean_lat else 0.0
         lines.append(f"{name:34s} {v:14.4f} {share:7.1%}")
-    lines.append(f"{'sum along the blocking path':34s} {blocking:14.4f}")
-    lines.append(f"{'mean traced client latency':34s} {mean_lat:14.4f}")
-    lines.append(f"{'traced p50 / untraced p50':34s} "
-                 f"{traced_p50:.4f} / {untraced_p50:.4f} s "
-                 f"(overhead {traced_p50 / untraced_p50 - 1 if untraced_p50 else 0:+.1%})")
+    book = sum(r["tracer_s"] for r in per_req) / n
+    net_p50 = quantile([r["latency"] - r["tracer_s"] for r in per_req], 50)
+    ok = [r.latency for r in untraced if r.ok]
+    untraced_mean = sum(ok) / len(ok) if ok else 0.0
+    lines += [
+        f"{'sum along the blocking path':34s} {blocking:14.4f}",
+        f"{'  of which tracer bookkeeping':34s} {book:14.4f}",
+        f"{'  less bookkeeping':34s} {blocking - book:14.4f}",
+        f"{'untraced mean, same slots':34s} {untraced_mean:14.4f}"
+        f"  gap {_gap(blocking - book, untraced_mean)}",
+        f"{'traced p50 less bookkeeping':34s} {net_p50:14.4f}",
+        f"{'untraced p50, same slots':34s} {untraced_p50:14.4f}"
+        f"  gap {_gap(net_p50, untraced_p50)}",
+        f"{'trace overhead (p50 ratio - 1)':34s} {traced_p50:.4f} / "
+        f"{untraced_p50:.4f} s  {_gap(traced_p50, untraced_p50)}",
+    ]
     bg = defaultdict(lambda: [0, 0.0])
     for s in spans:
         if s["rid"] not in primary:

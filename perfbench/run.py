@@ -94,7 +94,7 @@ def _report_end_to_end(workload: str, ctx, out: dict) -> dict:
     _line(f"tail_s ({names['tail_s']})", prim["tail_s"], "s",
           f"n={n}, {prim['beyond_tail']} beyond p{prim['tail_q']:g}")
     _line(f"ops_per_s ({names['ops_per_s']})", prim["rps"], "1/s",
-          f"n={n - prim['failed']} completed")
+          prim.get("ops_note", f"n={n - prim['failed']} completed"))
     _line("peak_rss_mb", out["peak_rss_mb"], "MB", "server process tree")
     for name, value, unit, n_samples in out.get("extra", []):
         _line(name, value, unit, f"n={n_samples}")
@@ -144,11 +144,8 @@ def main() -> None:
 
     if args.trace:
         spans, requests = layers.load(out["span_files"])
-        primary = [r for r in out["results"] if r.kind == "read"]
         metrics, table = layers.summarize(
-            spans, requests, primary,
-            out["untraced"]["p50_s"], out["traced"]["p50_s"],
-        )
+            spans, requests, out["traced_results"], out["untraced_results"])
         table_path = ctx.out_path(f"{args.workload}-seed{args.seed}.layers.txt")
         with open(table_path, "w") as f:
             f.write(table + "\n")

@@ -14,7 +14,9 @@
 
 A span is (id, parent, request id, name, start, end, attrs). Spans stay in
 memory until `dump(path)`, which also resolves each request's Spark job
-group to job and task counts through the status tracker.
+group to job and task counts through the status tracker. The tracer times
+its own bookkeeping (span records, job groups, counting bytes and rows) on
+each request's thread and reports it per request as `tracer_s`.
 """
 
 from __future__ import annotations
@@ -58,6 +60,7 @@ class Tracer:
         self.enabled = False
         self.spans: list[dict] = []
         self.groups: dict[str, str] = {}  # request id -> spark job group
+        self.costs: dict[str, float] = {}  # request id -> bookkeeping s
         self._ids = itertools.count(1)
         self._lock = threading.Lock()
         self._local = threading.local()
@@ -75,10 +78,15 @@ class Tracer:
         rid = getattr(self._local, "rid", None)
         return rid or f"bg-{threading.current_thread().name}"
 
+    def charge(self, seconds: float) -> None:
+        """Add tracer bookkeeping time to the current thread's request."""
+        self._local.cost = getattr(self._local, "cost", 0.0) + seconds
+
     def run(self, name: str, fn, args, kwargs, after=None, attrs=None):
         """Call fn inside a span; `after(result, attrs)` may add counts."""
         if not self.enabled:
             return fn(*args, **kwargs)
+        t_in = time.perf_counter()
         stack = self._stack()
         span = {
             "id": next(self._ids),
@@ -101,6 +109,7 @@ class Tracer:
                 self.spans.append(span)
         if after is not None:
             after(result, span["attrs"])
+        self.charge(time.perf_counter() - span["end"] + span["start"] - t_in)
         return result
 
     def wrap(self, owner, attr: str, name: str, after=None, tag=None):
@@ -121,6 +130,7 @@ class Tracer:
     def handle(self, handler, method: str, orig) -> None:
         if not self.enabled:
             return orig(handler)
+        t_in = time.perf_counter()
         rid = handler.headers.get(REQUEST_HEADER) or f"anon-{next(self._ids)}"
         group = f"perfbench-{rid}"
         self._local.rid = rid
@@ -129,6 +139,7 @@ class Tracer:
         with self._lock:
             self.groups[rid] = group
         path = handler.path.split("?", 1)[0]
+        self._local.cost = time.perf_counter() - t_in
 
         def sent(_result, attrs):
             attrs["response_bytes"] = self._local.resp_bytes
@@ -143,8 +154,12 @@ class Tracer:
                 attrs={"method": method, "path": path},
             )
         finally:
+            t_out = time.perf_counter()
             self.sc.setLocalProperty("spark.jobGroup.id", None)
             self._local.rid = None
+            self.charge(time.perf_counter() - t_out)
+            with self._lock:
+                self.costs[rid] = self._local.cost
 
     def add_response_bytes(self, n: int) -> None:
         if self.enabled:
@@ -172,7 +187,8 @@ class Tracer:
                     st = tracker.getStageInfo(s)
                     if st is not None:
                         tasks += st.numCompletedTasks
-            out[rid] = {"spark_jobs": len(jobs), "spark_tasks": tasks}
+            out[rid] = {"spark_jobs": len(jobs), "spark_tasks": tasks,
+                        "tracer_s": self.costs.get(rid, 0.0)}
         return out
 
     def dump(self, path: str) -> None:
@@ -235,12 +251,14 @@ def install(spark) -> Tracer:
     def traced_read(spark_, paths, *a, **kw):
         attrs = {}
         if t.enabled:
+            t0 = time.perf_counter()
             local = [p for p in paths if os.path.exists(p)]
             attrs = {
                 "files": len(paths),
                 "bytes_selected": sum(_tree_bytes(p) for p in local),
                 "rows_selected": t.file_rows(local),
             }
+            t.charge(time.perf_counter() - t0)
         return t.run("sources.reader.read", read_orig,
                      (spark_, paths) + a, kw, attrs=attrs)
 

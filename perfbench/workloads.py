@@ -1,15 +1,17 @@
-"""The three workloads: request mixes, setup, gate, timed phase, script.
+"""The workloads: request mix, setup, gate, timed phase, script.
 
 dashboard_reads   closed loop, nproc clients: small observation reads for
                   1-5 Zipf-skewed stations over 4 h / 24 h / 3 d windows
                   near the newest hour, plus /stations, /files and
                   GET /oracle/events.
-forecast_contest  closed loop, 2 clients: /stations/forecasts for 5-50
-                  stations over +-7 d, each with a distinct generated_*
-                  range.
-ingest_and_score  a fixed script of simulated hours (daemon cycle, event,
-                  entry batches, POST /oracle/update polled to completion)
-                  with closed-loop dashboard readers beside it.
+ingest_and_score  a fixed script of one simulated hour (daemon cycle,
+                  event, entry batch, POST /oracle/update polled to
+                  completion) with closed-loop dashboard readers beside it.
+
+The window presets are the reference UI's defaults (BASELINE.md, "UI
+default query windows"). The route and window shares, the Zipf exponent,
+the lookback and the ingest sizes are assumptions within that mix, not
+measured traffic.
 """
 
 from __future__ import annotations
@@ -66,21 +68,20 @@ def _interleave(schedule) -> list[tuple]:
 
 
 ZIPF_S = 1.1
-FORECAST_CLIENTS = 2
 INGEST_READERS = 2
-INGEST_HOURS = 1
 DAEMON_STATIONS = 50  # one NDFD batch
-ENTRY_BATCHES = 1
 ENTRIES_PER_BATCH = 10
 DAEMON_CYCLE_TIMEOUT_S = 170.0
 PROBE_REQUESTS = 3
 PROBE_CLIENT = 1000  # a request stream no load client uses
 WARM_LOAD_S = 3.0
+# traced runs load the server untraced this long before the ABBA phases, so
+# the JIT's early speed-up does not land on the first (untraced) segment
+TRACE_WARM_S = 10.0
 # tails: the highest percentile a run's sample supports with some margin --
 # ~20 timed reads per dashboard run, ~50 reads beside ingest
 DASH_TAIL_Q = 75.0
 READ_TAIL_Q = 90.0
-FORECAST_TAIL_Q = 75.0
 SERVER_DRIVER_MEM = "2g"
 DAEMON_DRIVER_MEM = "1g"
 
@@ -148,11 +149,17 @@ class DashboardMix:
         return end - timedelta(hours=hours), end
 
     def spec(self, client: int, i: int) -> Spec:
+        """Client `client`'s i-th request; clients start at evenly spaced
+        points of the schedule."""
+        return self.slot_spec(client, (i + client * 13) % len(self.cycle))
+
+    def slot_spec(self, client: int, slot: int) -> Spec:
+        """A request of the schedule's kind `slot`, drawn from the client's
+        stream."""
         rng = self.rngs.setdefault(
             client, np.random.default_rng([self.seed, 20, client])
         )
-        # clients start at evenly spaced points of the schedule
-        route, hours = self.cycle[(i + client * 13) % len(self.cycle)]
+        route, hours = self.cycle[slot]
         if route in ("/stations/observations", "/stations/daily-observations"):
             start, end = self.window(rng, hours)
             ids = self.stations(rng, int(rng.integers(1, 6)))
@@ -179,45 +186,13 @@ class DashboardMix:
         ]
 
 
-class ForecastMix:
-    """Contest coordinators: 5-50 stations over +-7 d around a day in the
-    store; every request has its own generated_* range."""
-
-    def __init__(self, seed: int, st: datagen.Stations):
-        self.seed = seed
-        self.ids = st.ids
-        self.rngs: dict[int, np.random.Generator] = {}
-
-    def _spec(self, rng, offset_s: int, kind: str) -> Spec:
-        k = int(rng.integers(5, 51))
-        ids = [str(s) for s in rng.choice(self.ids, size=k, replace=False)]
-        center = datagen.D0 + timedelta(hours=int(rng.integers(24, 72)))
-        return Spec("GET", "/stations/forecasts", kind, {
-            "station_ids": ids,
-            "start": center - timedelta(days=7),
-            "end": center + timedelta(days=7),
-            "generated_start": datagen.D0 - timedelta(days=1, seconds=-offset_s),
-            "generated_end": datagen.D0 + timedelta(days=3, seconds=-offset_s),
-        })
-
-    def spec(self, client: int, i: int) -> Spec:
-        rng = self.rngs.setdefault(
-            client, np.random.default_rng([self.seed, 40, client])
-        )
-        return self._spec(rng, 1 + client * 20000 + i, "read")
-
-    def warmups(self) -> list[Spec]:
-        return [self._spec(np.random.default_rng([self.seed, 41]), 0, "warmup")]
-
-
 def validate(spec: Spec, r) -> str | None:
     """Shape checks on every timed response."""
     try:
         body = r.json()
     except ValueError:
         return f"{spec.route}: response is not JSON"
-    if spec.route in ("/stations/observations", "/stations/daily-observations",
-                      "/stations/forecasts"):
+    if spec.route in ("/stations/observations", "/stations/daily-observations"):
         want = set(spec.params["station_ids"])
         if not isinstance(body, list) or not body:
             return f"{spec.route}: empty answer for {sorted(want)}"
@@ -344,24 +319,35 @@ def timed_loop(ctx: Context, port: int, n_clients: int, make_spec,
 
 
 def traced_phases(ctx: Context, srv: Child, port: int, n_clients: int,
-                  make_spec, seconds: float, tail_q: float) -> dict:
-    """Untraced and traced segments in ABBA order (each a quarter of
-    `seconds`) so a linear drift lands on both sides equally; the overhead
-    is the ratio of the two sides' medians."""
+                  mix: DashboardMix) -> dict:
+    """The untraced and the traced side each send every slot of the
+    schedule once, so both sides carry the whole mix. They run in ABBA
+    order by halves of the schedule (untraced and traced send the first
+    half, then traced and untraced the second), so a linear drift lands on
+    both sides equally. Within a half the clients take its slots in turn."""
+    n = len(mix.cycle)
+    halves = ((0, n // 2), (n // 2, n))
+    order = (("untraced", halves[0]), ("traced", halves[0]),
+             ("traced", halves[1]), ("untraced", halves[1]))
+    warm, _t0 = timed_loop(ctx, port, n_clients, mix.spec, TRACE_WARM_S, "tw")
+    ctx.count(warm)
     sides: dict[str, list] = {"untraced": [], "traced": []}
-    for k, side in enumerate(("untraced", "traced", "traced", "untraced")):
+    for k, (side, (lo, hi)) in enumerate(order):
         srv.send(f"trace {'on' if side == 'traced' else 'off'}")
-        res, _t0 = timed_loop(ctx, port, n_clients, make_spec, seconds / 4,
-                              f"{side[0]}{k}")
-        ctx.count(res)
-        sides[side].extend(res)
+
+        def make_spec(c: int, i: int, lo=lo, hi=hi) -> Spec | None:
+            slot = lo + c + n_clients * i
+            return mix.slot_spec(c, slot) if slot < hi else None
+
+        rec = Recorder()
+        closed_loop(port, n_clients, make_spec, threading.Event(), rec,
+                    validate, f"{side[0]}{k}")
+        ctx.problems.extend(rec.invalid[:5])
+        ctx.count(rec.results)
+        sides[side].extend(rec.results)
     srv.send("trace on")
-    return {
-        "untraced": latency_stats(sides["untraced"], tail_q, seconds),
-        "traced": latency_stats(sides["traced"], tail_q, seconds),
-        "primary": latency_stats(sides["traced"], tail_q, seconds),
-        "results": sides["traced"],
-    }
+    return {"untraced_results": sides["untraced"],
+            "traced_results": sides["traced"]}
 
 
 def spark_probe(ctx: Context, port: int, make_spec) -> None:
@@ -411,45 +397,41 @@ def _create_event(ctx: Context, port: int, rng, rid: str):
 # ---------------------------------------------------------------------------
 
 
-def _read_workload(ctx: Context, mix, n_clients: int, tail_q: float,
-                   events_dir: str, create_event: bool) -> dict:
+def dashboard_reads(ctx: Context) -> dict:
+    mix = DashboardMix(ctx.seed, datagen.Stations(ctx.seed), datagen.data_end())
+    events = ctx.out_path("events")
+    shutil.rmtree(events, ignore_errors=True)
+    n = os.cpu_count()
     warm_specs = mix.warmups()
-    srv, port, setup_s, warm = start_server(ctx, ctx.store, events_dir, warm_specs)
+    srv, port, setup_s, warm = start_server(ctx, ctx.store, events, warm_specs)
+    out: dict = {"setup_s": setup_s, "clients": n}
     try:
         check_warmups(ctx, warm_specs, warm, ctx.store, ctx.manifest)
-        out = {"setup_s": setup_s}
         # The JIT keeps compiling for a while after the warm-ups, so the
         # closed loop runs WARM_LOAD_S untimed first (the dashboard's one
         # event is created meanwhile). The timed loop then restarts every
         # client at its own point of the schedule, so each run's timed
         # window sends the same request mix.
-        prep = threading.Thread(target=_prep_event, args=(ctx, port)) \
-            if create_event else None
-        if prep:
-            prep.start()
-        warm, _t0 = timed_loop(ctx, port, n_clients, mix.spec, WARM_LOAD_S, "w")
+        prep = threading.Thread(target=_prep_event, args=(ctx, port))
+        prep.start()
+        warm, _t0 = timed_loop(ctx, port, n, mix.spec, WARM_LOAD_S, "w")
         ctx.count(warm)
-        if prep:
-            prep.join()
+        prep.join()
         if ctx.trace:
-            out.update(traced_phases(ctx, srv, port, n_clients, mix.spec,
-                                     ctx.seconds, tail_q))
+            out.update(traced_phases(ctx, srv, port, n, mix))
         else:
-            results, t0 = timed_loop(ctx, port, n_clients, mix.spec,
-                                     ctx.seconds, "")
+            results, t0 = timed_loop(ctx, port, n, mix.spec, ctx.seconds, "")
             ctx.count(results)
-            out["primary"] = window_stats(results, t0, ctx.seconds, tail_q)
-            out["results"] = results
+            out["primary"] = window_stats(results, t0, ctx.seconds, DASH_TAIL_Q)
         srv.snapshot_tree()
         out["peak_rss_mb"] = peak_rss_mb(srv.proc.pid)
         if ctx.trace:
             spark_probe(ctx, port, mix.spec)
-            spans = ctx.out_path("server.spans.json")
-            srv.send(f"dump {spans}")
-            srv.read_json(120)
-            out["span_files"] = [spans]
+            out["span_files"] = [_dump_spans(ctx, srv, "server")]
     finally:
         srv.stop()
+    out["names"] = {"p50_s": "read_p50_s", "tail_s": "read_p75_s",
+                    "ops_per_s": "read_rps"}
     return out
 
 
@@ -459,29 +441,11 @@ def _prep_event(ctx: Context, port: int) -> None:
     ctx.count([r])
 
 
-def dashboard_reads(ctx: Context) -> dict:
-    st = datagen.Stations(ctx.seed)
-    mix = DashboardMix(ctx.seed, st, datagen.data_end())
-    events = ctx.out_path("events")
-    shutil.rmtree(events, ignore_errors=True)
-    n = os.cpu_count()
-    out = _read_workload(ctx, mix, n, DASH_TAIL_Q, events, create_event=True)
-    out["clients"] = n
-    out["names"] = {"p50_s": "read_p50_s", "tail_s": "read_p75_s",
-                    "ops_per_s": "read_rps"}
-    return out
-
-
-def forecast_contest(ctx: Context) -> dict:
-    mix = ForecastMix(ctx.seed, datagen.Stations(ctx.seed))
-    events = ctx.out_path("events")
-    shutil.rmtree(events, ignore_errors=True)
-    out = _read_workload(ctx, mix, FORECAST_CLIENTS, FORECAST_TAIL_Q, events,
-                         create_event=False)
-    out["clients"] = FORECAST_CLIENTS
-    out["names"] = {"p50_s": "forecast_p50_s", "tail_s": "forecast_p75_s",
-                    "ops_per_s": "forecast_rps"}
-    return out
+def _dump_spans(ctx: Context, child: Child, name: str) -> str:
+    path = ctx.out_path(f"{name}.spans.json")
+    child.send(f"dump {path}")
+    child.read_json(120)
+    return path
 
 
 def ingest_and_score(ctx: Context) -> dict:
@@ -503,128 +467,103 @@ def ingest_and_score(ctx: Context) -> dict:
                 ctx.child_env(DAEMON_DRIVER_MEM), ctx.out_path("daemon.log"))
     out: dict = {"clients": INGEST_READERS}
     try:
+        # the daemon is up before the server starts, so setup_s is the
+        # server's alone
+        dmn.read_json(STARTUP_TIMEOUT_S)
         warm_specs = mix.warmups()
         srv, port, setup_s, warm = start_server(ctx, store, events, warm_specs)
         out["setup_s"] = setup_s
         try:
             check_warmups(ctx, warm_specs, warm, ctx.store, ctx.manifest)
-            dmn.read_json(STARTUP_TIMEOUT_S)  # daemon ready
-            phases = {}
-            if ctx.trace:
-                phases = traced_phases(ctx, srv, port, INGEST_READERS, mix.spec,
-                                       ctx.seconds, READ_TAIL_Q)
+            if ctx.trace:  # the read layers, loaded as on dashboard_reads
+                out.update(traced_phases(ctx, srv, port, os.cpu_count(), mix))
             out.update(_ingest_script(ctx, port, dmn, mix))
-            out.update({k: phases[k] for k in ("untraced", "traced") if phases})
             srv.snapshot_tree()
             out["peak_rss_mb"] = peak_rss_mb(srv.proc.pid)
             _ingest_gate(ctx, port, store, events, out)
             if ctx.trace:
                 spark_probe(ctx, port, mix.spec)
-                spans = ctx.out_path("server.spans.json")
-                srv.send(f"dump {spans}")
-                srv.read_json(120)
-                out["span_files"] = [spans, out["daemon_spans"]]
+                out["span_files"] = [_dump_spans(ctx, srv, "server"),
+                                     _dump_spans(ctx, dmn, "daemon")]
         finally:
             srv.stop()
     finally:
         dmn.stop()
     out["names"] = {"p50_s": "read_p50_s", "tail_s": "read_p90_s",
-                    "ops_per_s": "read_rps"}
+                    "ops_per_s": "script_ops_per_s"}
     return out
 
 
 def _ingest_script(ctx: Context, port: int, dmn: Child,
                    mix: DashboardMix) -> dict:
-    """Per simulated hour: the daemon lands the hour's snapshots while one
-    event is created; then the readers run against the grown store while
-    the event's entry batches are posted and a scoring update is polled to
-    the end."""
+    """One simulated hour, one step after another: the daemon lands the
+    hour's snapshots, an event is created, then a batch of entries is
+    posted and a scoring update is polled to the end while the readers
+    run against the grown store. The script's rate (completed steps per
+    second of script time) is the workload's ops_per_s, so every step's
+    layers move a gated metric; the readers give p50_s and tail_s."""
     rng = np.random.default_rng([ctx.seed, 60])
-    rec = Recorder()
-    cycles, creates, entry_posts, updates = [], [], [], []
-    landed: list[str] = []
-    posted: list[str] = []
-    read_s = 0.0
+    hour = datagen.data_end() + timedelta(hours=1)
     t0 = time.perf_counter()
-    for h in range(INGEST_HOURS):
-        hour = datagen.data_end() + timedelta(hours=h + 1)
-        dmn.send(f"cycle {hour.isoformat()}")
-        # the hour's event is created while the daemon works
-        body, r = _create_event(ctx, port, rng, f"event-{h}")
-        creates.append(r)
-        reply = dmn.read_json(DAEMON_CYCLE_TIMEOUT_S)
-        cycles.append(reply["cycle_s"])
-        landed.extend(reply["paths"].values())
-        mix.now = hour  # readers favour the newest landed hour
-        if h == INGEST_HOURS - 1:
-            daemon_spans = _release_daemon(ctx, dmn)
-        stop = threading.Event()
-        readers = threading.Thread(
-            target=closed_loop,
-            args=(port, INGEST_READERS, mix.spec, stop, rec, validate, f"h{h}"),
-        )
-        t_read = time.perf_counter()
-        readers.start()
-        try:
-            if r.ok:
-                for b in range(ENTRY_BATCHES):
-                    entries = [_entry(rng, body["locations"])
-                               for _ in range(ENTRIES_PER_BATCH)]
-                    e = call(port, "POST", f"/oracle/events/{body['id']}/entries",
-                             "entry_write", f"entries-{h}-{b}",
-                             {"entries": entries})
-                    entry_posts.append(e)
-                    if e.ok:
-                        posted.extend(x["id"] for x in entries)
-            updates.append(_score_update(port, f"update-{h}"))
-        finally:
-            stop.set()
-            readers.join()
-        read_s += time.perf_counter() - t_read
-    wall = time.perf_counter() - t0
-    ctx.count(creates + entry_posts + rec.results)
-    for name, ok, detail in updates:
-        ctx.ops.append((name, ok))
-        if not ok:
-            ctx.failures.append(f"{name}: {detail}")
-    ctx.ops.extend(("ingest_cycle", True) for _ in cycles)
-    if len(cycles) != INGEST_HOURS or len(landed) != 2 * INGEST_HOURS:
-        ctx.problems.append(f"daemon landed {landed} in {len(cycles)} cycles")
+    dmn.send(f"cycle {hour.isoformat()}")
+    reply = dmn.read_json(DAEMON_CYCLE_TIMEOUT_S)
+    landed = list(reply["paths"].values())
+    if len(landed) != 2:
+        ctx.problems.append(f"daemon landed {landed}")
+    body, create = _create_event(ctx, port, rng, "event")
+    mix.now = hour  # readers favour the newest landed hour
+    rec = Recorder()
+    stop = threading.Event()
+    readers = threading.Thread(
+        target=closed_loop,
+        args=(port, INGEST_READERS, mix.spec, stop, rec, validate, "r"),
+    )
+    t_read = time.perf_counter()
+    readers.start()
+    posted, entry_post = [], None
+    try:
+        if create.ok:
+            entries = [_entry(rng, body["locations"])
+                       for _ in range(ENTRIES_PER_BATCH)]
+            entry_post = call(port, "POST", f"/oracle/events/{body['id']}/entries",
+                              "entry_write", "entries", {"entries": entries})
+            if entry_post.ok:
+                posted = [x["id"] for x in entries]
+        update_ok, update = _score_update(port, "update")
+    finally:
+        stop.set()
+        readers.join()
+    read_s = time.perf_counter() - t_read
+    script_s = time.perf_counter() - t0
+    entry_ok = bool(entry_post and entry_post.ok)
+    # a cycle either lands (what it landed is gated) or ends the daemon
+    done = 1 + create.ok + entry_ok + update_ok
+    ctx.count([create] + ([entry_post] if entry_post else []) + rec.results)
+    ctx.ops.extend([("ingest_cycle", True), ("score_update", update_ok)])
+    if not update_ok:
+        ctx.failures.append(f"score_update: {update}")
     ctx.problems.extend(rec.invalid[:5])
-    ok_creates = [r.latency for r in creates if r.ok]
-    ok_entries = [r.latency for r in entry_posts if r.ok]
-    ok_updates = [s for _n, k, s in updates if k]
+    stats = latency_stats(rec.results, READ_TAIL_Q, read_s)
+    read_rps = stats["rps"]
+    stats["rps"] = done / script_s
+    stats["ops_note"] = f"{done} of 4 script steps in {script_s:.1f} s"
+    nan = float("nan")
     return {
-        "primary": latency_stats(rec.results, READ_TAIL_Q, read_s),
-        "results": rec.results,
+        "primary": stats,
         # reported only: (name, value, unit, samples)
         "extra": [
-            ("ingest_cycle_s", _median(cycles), "s", len(cycles)),
-            ("event_create_s", _median(ok_creates), "s", len(creates)),
-            ("entry_write_p50_s", _median(ok_entries), "s", len(entry_posts)),
-            ("score_update_s", _median(ok_updates), "s", len(updates)),
-            ("script_s", wall, "s", INGEST_HOURS),
+            ("ingest_cycle_s", reply["cycle_s"], "s", 1),
+            ("event_create_s", create.latency if create.ok else nan, "s", 1),
+            ("entry_write_p50_s",
+             entry_post.latency if entry_ok else nan, "s",
+             int(entry_post is not None)),
+            ("score_update_s", update if update_ok else nan, "s", 1),
+            ("script_s", script_s, "s", 1),
+            ("read_rps", read_rps, "1/s", len(rec.results)),
         ],
         "landed": landed,
-        "daemon_spans": daemon_spans,
         "posted_entries": posted,
     }
-
-
-def _median(xs: list[float]) -> float:
-    return float(np.median(xs)) if xs else float("nan")
-
-
-def _release_daemon(ctx: Context, dmn: Child) -> str | None:
-    """The daemon is done after the last cycle: write its spans (traced
-    runs) and let it shut down while the script goes on."""
-    path = None
-    if ctx.trace:
-        path = ctx.out_path("daemon.spans.json")
-        dmn.send(f"dump {path}")
-        dmn.read_json(120)
-    dmn.send("quit")
-    return path
 
 
 def _entry(rng, locations: list[str]) -> dict:
@@ -640,13 +579,13 @@ def _entry(rng, locations: list[str]) -> dict:
     }
 
 
-def _score_update(port: int, rid: str) -> tuple[str, bool, float | str]:
+def _score_update(port: int, rid: str) -> tuple[bool, float | str]:
     """POST /oracle/update and poll until the task leaves `running`.
-    Returns (name, ok, seconds to completion or what went wrong)."""
+    Returns (ok, seconds to completion or what went wrong)."""
     t0 = time.perf_counter()
     r = call(port, "POST", "/oracle/update", "score_update", rid)
     if not r.ok:
-        return "score_update", False, f"{r.status} {r.error or r.body[:200]!r}"
+        return False, f"{r.status} {r.error or r.body[:200]!r}"
     pid = r.json()["etl_process_id"]
     deadline = t0 + DAEMON_CYCLE_TIMEOUT_S
     while time.perf_counter() < deadline:
@@ -654,10 +593,10 @@ def _score_update(port: int, rid: str) -> tuple[str, bool, float | str]:
         if s.ok and s.json()["state"] != "running":
             state = s.json()
             if state["state"] == "completed":
-                return "score_update", True, time.perf_counter() - t0
-            return "score_update", False, str(state.get("error"))[:200]
+                return True, time.perf_counter() - t0
+            return False, str(state.get("error"))[:200]
         time.sleep(0.1)
-    return "score_update", False, "timed out"
+    return False, "timed out"
 
 
 def _ingest_gate(ctx: Context, port: int, store: str, events: str,
@@ -697,6 +636,5 @@ def _ingest_gate(ctx: Context, port: int, store: str, events: str,
 
 WORKLOADS = {
     "dashboard_reads": dashboard_reads,
-    "forecast_contest": forecast_contest,
     "ingest_and_score": ingest_and_score,
 }
