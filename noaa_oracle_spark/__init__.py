@@ -21,7 +21,7 @@ Layout:
     queries     the four reference weather queries as pure DataFrame functions
     sql         DuckDB-dialect → Spark SQL rewriter for /raw parity
     scoring     contest scoring kernel + outcome enumeration + winner pick
-    eventstore  parquet-backed single-writer event tables
+    eventstore  single-writer event tables held as Arrow snapshots
     pipeline    training-data ops: dedup (exact/minhash/simhash/jaccard),
                 ANN similarity search, text analysis, multimodal columns
     streaming   Structured Streaming variants of snapshot ingestion

@@ -1,13 +1,18 @@
-"""Parquet-backed transactional event store with a single-writer queue.
+"""Event tables held as immutable Arrow snapshots by a single writer.
 
 The reference keeps event/entry/weather state in SQLite behind a
 single-writer mpsc channel — every mutation is serialized through one
 writer task (crates/oracle/src/db/sqlite.rs:24-72); schema from
 crates/oracle/migrations/20250111000001_initial_schema.sql:1-88. Spark has
 no OLTP layer, and the reference's write volume (≤ 25 entries/event, hourly
-ETL) doesn't need one — so mutations here go through an in-process lock +
-atomic snapshot rewrite per table, mirroring the serialized-writer model,
-while reads are plain DataFrames any Spark plan can join against.
+ETL) doesn't need one. The one `EventStore` of a process owns each table as
+an immutable `pyarrow.Table`, loaded once from parquet at open. A mutation
+validates against it in plain Python under the writer lock, writes the new
+table with `pq.write_table`, publishes it with `statedir.publish` and swaps
+the snapshot in one assignment: no Spark job, no parquet re-read. A read
+builds its DataFrame from the snapshot it sees (a local relation over no
+file), so a frame taken before a mutation keeps its rows and no read races
+a publication on disk.
 
 Event status is never stored — derived from the clock at read time
 (db/mod.rs:513-533), reproduced by `get_status`/`status_column`.
@@ -25,9 +30,12 @@ import threading
 import uuid as uuidlib
 from datetime import datetime, timezone
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from noaa_oracle_spark.incremental import statedir
 
@@ -77,6 +85,7 @@ _TABLES = {
     "events_entries": ENTRIES_SCHEMA,
     "expected_observations": CHOICES_SCHEMA,
 }
+_ARROW = {table: to_arrow_schema(schema) for table, schema in _TABLES.items()}
 
 VALUE_OPTIONS = {"over", "par", "under"}
 SCORING_FIELDS = {
@@ -122,45 +131,61 @@ def _validate_uuid_v7(s: str) -> None:
 
 
 class EventStore:
-    """Single-writer parquet tables under `path/{table}/current.parquet`."""
+    """Single writer over `path/{table}/current.parquet`, serving reads from
+    one immutable Arrow snapshot per table (see the module docstring)."""
 
     def __init__(self, spark: SparkSession, path: str):
         self.spark = spark
         self.path = path
         self._lock = threading.Lock()  # the DatabaseWriter serialization
         os.makedirs(path, exist_ok=True)
+        self._snapshot = {table: self._load(table) for table in _TABLES}
 
     # -- storage primitives -------------------------------------------------
 
     def _table_path(self, table: str) -> str:
         return os.path.join(self.path, table, "current.parquet")
 
-    def read(self, table: str) -> DataFrame:
+    def _load(self, table: str) -> pa.Table:
         p = self._table_path(table)
         statedir.recover(p)  # heal a crash between publication renames
         if not os.path.exists(p):
-            return self.spark.createDataFrame([], _TABLES[table])
-        return self.spark.read.schema(_TABLES[table]).parquet(p)
+            return _ARROW[table].empty_table()
+        return pq.read_table(p).cast(_ARROW[table])
 
-    def _overwrite(self, table: str, df: DataFrame) -> None:
-        """Atomic snapshot replace: write to a temp dir, park the old
-        snapshot, rename into place, drop the parked copy (with
-        statedir.recover healing any crash point on the next touch).
-        Serialized by the writer lock — the Spark analog of the reference's
-        one-writer channel; readers keep seeing the old snapshot until the
-        rename lands."""
+    def _frames(self, *tables: str) -> list[DataFrame]:
+        """DataFrames over ONE snapshot, so a read joining two tables
+        never sees half of a mutation."""
+        snap = self._snapshot
+        return [self.spark.createDataFrame(snap[t], _TABLES[t])
+                for t in tables]
+
+    def read(self, table: str) -> DataFrame:
+        return self._frames(table)[0]
+
+    def _overwrite(self, table: str, data: pa.Table) -> None:
+        """Write `data` beside the table and publish it as the new snapshot
+        (`statedir.publish`; the caller holds the writer lock). A `.new`
+        left by a crash holds only the two files rewritten here. The
+        schema is not stored: `_load` casts to `_ARROW`."""
         p = self._table_path(table)
-        statedir.recover(p)
-        tmp = p + ".tmp"
-        df.coalesce(1).write.mode("overwrite").parquet(tmp)
-        old = p + ".old"
-        if os.path.exists(p):
-            os.rename(p, old)
-        os.rename(tmp, p)
-        if os.path.exists(old):
-            import shutil
+        tmp = p + ".new"
+        os.makedirs(tmp, exist_ok=True)
+        pq.write_table(data, os.path.join(tmp, "part-00000.parquet"),
+                       store_schema=False)
+        statedir.publish(p, tmp, {"rows": data.num_rows})
 
-            shutil.rmtree(old)
+    def _rows(self, table: str) -> list[dict]:
+        return self._snapshot[table].to_pylist()
+
+    def _commit(self, **rows: list[dict]) -> None:
+        """Publish each table's new rows, then swap the snapshot dict in one
+        assignment: readers see a mutation's tables change together."""
+        new = {t: pa.Table.from_pylist(r, schema=_ARROW[t])
+               for t, r in rows.items()}
+        for table, data in new.items():
+            self._overwrite(table, data)
+        self._snapshot = {**self._snapshot, **new}
 
     # -- mutations (all serialized) ----------------------------------------
 
@@ -195,18 +220,17 @@ class EventStore:
         bad = set(fields) - SCORING_FIELDS
         if bad:
             raise ValueError(f"unknown scoring fields: {sorted(bad)}")
-        row = (
+        row = dict(zip(EVENTS_SCHEMA.names, (
             event_id, total_allowed_entries, number_of_places_win,
             number_of_values_per_entry, signing_date, start_observation_date,
             end_observation_date, list(locations), coordinator_pubkey,
             nonce, event_announcement, None, fields,
-        )
+        )))
         with self._lock:
-            cur = self.read("events")
-            if cur.filter(F.col("id") == event_id).count() > 0:
+            events = self._rows("events")
+            if any(r["id"] == event_id for r in events):
                 raise ValueError(f"event {event_id} already exists")
-            new = self.spark.createDataFrame([row], EVENTS_SCHEMA)
-            self._overwrite("events", cur.unionByName(new))
+            self._commit(events=events + [row])
 
     def add_entries(
         self, event_id: str, entries: list[dict]
@@ -216,14 +240,13 @@ class EventStore:
         allowed, stations ⊆ event.locations, choice values ∈ over/par/under,
         values-per-entry cap."""
         with self._lock:
-            ev = self.read("events").filter(F.col("id") == event_id).collect()
-            if not ev:
+            ev = next(
+                (r for r in self._rows("events") if r["id"] == event_id), None
+            )
+            if ev is None:
                 raise ValueError(f"no such event {event_id}")
-            ev = ev[0]
-            cur_entries = self.read("events_entries")
-            existing = cur_entries.filter(
-                F.col("event_id") == event_id
-            ).count()
+            cur_entries = self._rows("events_entries")
+            existing = sum(r["event_id"] == event_id for r in cur_entries)
             if existing + len(entries) > ev["total_allowed_entries"]:
                 raise ValueError("entry count exceeds total_allowed_entries")
             entry_rows, choice_rows = [], []
@@ -247,70 +270,63 @@ class EventStore:
                             raise ValueError(f"bad choice value {v!r}")
                     n_values += len(vals)
                     choice_rows.append(
-                        (
-                            e["id"], c["station"], c.get("temp_low"),
-                            c.get("temp_high"), c.get("wind_speed"),
-                            c.get("wind_direction"), c.get("rain_amt"),
-                            c.get("snow_amt"), c.get("humidity"),
-                        )
+                        {"entry_id": e["id"], "station": c["station"], **vals}
                     )
                 if n_values > ev["number_of_values_per_entry"]:
                     raise ValueError("too many values for entry")
-                entry_rows.append((e["id"], event_id, None, None))
-            self._overwrite(
-                "events_entries",
-                cur_entries.unionByName(
-                    self.spark.createDataFrame(entry_rows, ENTRIES_SCHEMA)
-                ),
-            )
-            cur_choices = self.read("expected_observations")
-            self._overwrite(
-                "expected_observations",
-                cur_choices.unionByName(
-                    self.spark.createDataFrame(choice_rows, CHOICES_SCHEMA)
+                entry_rows.append({"id": e["id"], "event_id": event_id})
+            self._commit(
+                events_entries=cur_entries + entry_rows,
+                expected_observations=(
+                    self._rows("expected_observations") + choice_rows
                 ),
             )
 
     def update_entry_scores(self, scores: list[tuple[str, int, int]]) -> None:
         """Batch score update (sqlite.rs:569-593): [(entry_id, total, base)].
-        Anti-join + union — the MERGE-free upsert."""
+        A score or base given as None keeps the stored value (COALESCE)."""
         if not scores:
             return
+        updates = {s[0]: (s[1], s[2]) for s in scores}
         with self._lock:
-            cur = self.read("events_entries")
-            updates = {s[0]: (s[1], s[2]) for s in scores}
-            upd_df = self.spark.createDataFrame(
-                [(k, v[0], v[1]) for k, v in updates.items()],
-                "id string, new_score long, new_base long",
-            )
-            merged = (
-                cur.join(upd_df, "id", "left")
-                .select(
-                    "id",
-                    "event_id",
-                    F.coalesce("new_score", "score").alias("score"),
-                    F.coalesce("new_base", "base_score").alias("base_score"),
-                )
-            )
-            self._overwrite("events_entries", merged)
+            rows = self._rows("events_entries")
+            for r in rows:
+                if r["id"] in updates:
+                    score, base = updates[r["id"]]
+                    if score is not None:
+                        r["score"] = score
+                    if base is not None:
+                        r["base_score"] = base
+            self._commit(events_entries=rows)
 
     def update_event_attestation(
         self, event_id: str, attestation: bytes
     ) -> None:
         with self._lock:
-            cur = self.read("events")
-            merged = cur.withColumn(
-                "attestation_signature",
-                F.when(F.col("id") == event_id, F.lit(attestation)).otherwise(
-                    F.col("attestation_signature")
-                ),
-            )
-            self._overwrite("events", merged)
+            rows = self._rows("events")
+            for r in rows:
+                if r["id"] == event_id:
+                    r["attestation_signature"] = attestation
+            self._commit(events=rows)
 
     # -- reads --------------------------------------------------------------
 
     def events_with_status(self, now: datetime | None = None) -> DataFrame:
         return self.read("events").withColumn("status", status_column(now))
+
+    def _with_entry_counts(self, now: datetime | None) -> DataFrame:
+        """Events with status LEFT JOIN their entry COUNT, COALESCE(0)."""
+        events, entries = self._frames("events", "events_entries")
+        events = events.withColumn("status", status_column(now))
+        counts = entries.groupBy("event_id").agg(
+            F.count("id").alias("total_entries")
+        )
+        return events.join(
+            counts, events.id == counts.event_id, "left"
+        ).select(
+            events["*"],
+            F.coalesce("total_entries", F.lit(0)).alias("total_entries"),
+        )
 
     def event_summaries(
         self,
@@ -325,33 +341,23 @@ class EventStore:
         The reference then attaches per-event weather readings
         (sqlite.rs:608-610); this store keeps no weather table — the
         column is an always-empty array, documented twin divergence."""
-        events = self.events_with_status(now)
+        events = self._with_entry_counts(now)
         if event_ids is not None:
             events = events.filter(F.col("id").isin(list(event_ids)))
-        counts = (
-            self.read("events_entries")
-            .groupBy("event_id")
-            .agg(F.count("id").alias("total_entries"))
-        )
-        out = (
-            events.join(counts, events.id == counts.event_id, "left")
-            .select(
-                events["id"],
-                "signing_date",
-                "start_observation_date",
-                "end_observation_date",
-                "locations",
-                "number_of_values_per_entry",
-                "status",
-                "total_allowed_entries",
-                F.coalesce("total_entries", F.lit(0)).alias(
-                    "total_entries"
-                ),
-                "number_of_places_win",
-                F.array().cast("array<string>").alias("weather"),
-                F.col("attestation_signature").alias("attestation"),
-                "nonce",
-            )
+        out = events.select(
+            "id",
+            "signing_date",
+            "start_observation_date",
+            "end_observation_date",
+            "locations",
+            "number_of_values_per_entry",
+            "status",
+            "total_allowed_entries",
+            "total_entries",
+            "number_of_places_win",
+            F.array().cast("array<string>").alias("weather"),
+            F.col("attestation_signature").alias("attestation"),
+            "nonce",
         )
         if limit is not None:
             out = out.limit(int(limit))
@@ -360,29 +366,21 @@ class EventStore:
     def active_events(self, now: datetime | None = None) -> DataFrame:
         """Unsigned events + their entry counts (sqlite.rs:428-483): LEFT
         join + COUNT + COALESCE(0) — operator J6/A8."""
-        events = self.events_with_status(now).filter(
+        return self._with_entry_counts(now).filter(
             F.col("attestation_signature").isNull()
-        )
-        counts = (
-            self.read("events_entries")
-            .groupBy("event_id")
-            .agg(F.count("id").alias("total_entries"))
-        )
-        return events.join(
-            counts, events.id == counts.event_id, "left"
-        ).select(
-            events["*"],
-            F.coalesce("total_entries", F.lit(0)).alias("total_entries"),
         )
 
     def event_entries(self, event_id: str) -> DataFrame:
         return self.read("events_entries").filter(F.col("event_id") == event_id)
 
     def entry_choices(self, event_id: str) -> DataFrame:
-        entries = self.event_entries(event_id).select(
+        entries, choices = self._frames(
+            "events_entries", "expected_observations"
+        )
+        ids = entries.filter(F.col("event_id") == event_id).select(
             F.col("id").alias("entry_id")
         )
-        return self.read("expected_observations").join(entries, "entry_id")
+        return choices.join(ids, "entry_id")
 
     def status_tally(self, now: datetime | None = None) -> DataFrame:
         """Dashboard status counts (routes/ui/fragments.rs:47-65) — A9."""

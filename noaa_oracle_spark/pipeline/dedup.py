@@ -44,9 +44,10 @@ def spread(df: DataFrame) -> DataFrame:
 
     Partition count alone can LIE for parquet (r13 optimization round):
     Spark plans byte-range splits, but a row GROUP is parquet's atomic
-    read unit — a huge single-row-group file yields `par` "splits" of
-    which exactly one carries every row, and every downstream per-row
-    kernel runs on one core while the partition count says wide.  (The
+    read unit, read whole by the split containing its midpoint — a huge
+    single-row-group file yields `par` "splits" of which exactly one
+    carries every row, and every downstream per-row kernel runs on one
+    core while the partition count says wide.  (The
     1M bench fixture is exactly this: one 269 MB / 716 MB file with ONE
     row group; the r12 width check silently serialized every 1M-rung
     kernel.)  So when the scan reads FEWER FILES than cores, the
@@ -55,7 +56,9 @@ def spread(df: DataFrame) -> DataFrame:
     overstates achievable parallelism ⇒ rebalance (guide §2.5's "one
     huge unsplittable file … repartition immediately after the read").
     Inputs with >= par files, non-parquet sources, and non-file frames
-    keep the width check's verdict untouched."""
+    keep the width check's verdict untouched, and so does a footer probe
+    that fails (a stale or unreadable file is inconclusive, not a reason
+    to rebalance a frame the width check already found wide)."""
     spark = df.sparkSession
     par = spark.sparkContext.defaultParallelism
     try:
@@ -73,7 +76,10 @@ def spread(df: DataFrame) -> DataFrame:
 
             total_rgs = 0
             for f in files:
-                total_rgs += footer_row_group_count(spark, f)
+                try:
+                    total_rgs += footer_row_group_count(spark, f)
+                except Exception:
+                    return df
                 if total_rgs >= par:
                     return df
             # fewer row groups than cores: fall through to the rebalance

@@ -208,7 +208,8 @@ def footer_row_group_count(spark, path: str) -> int:
     """Row-group count of one parquet file, from its footer only — the
     ACHIEVABLE scan parallelism of that file (a row group is parquet's
     atomic read unit: Spark plans byte-range splits, but every split
-    except the one holding a row group's start reads zero rows of it).
+    except the one containing the row group's midpoint reads zero rows
+    of it).
     Used by `dedup.spread` to detect the huge-single-row-group-file
     case (guide §2.5 "one huge unsplittable file") that partition
     count alone cannot see.  No Spark job; scheme-agnostic."""

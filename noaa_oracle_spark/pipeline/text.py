@@ -1577,7 +1577,8 @@ def _bm25_rank(
 #: the save_pq_index crash-consistency discipline)
 _BM25_MANIFEST_SCHEMA = (
     "format_version int, n_docs long, avgdl double, "
-    "n_postings long, id_col string, n_postings_files long"
+    "n_postings long, id_col string, n_postings_files long, "
+    "postings_bytes long"
 )
 
 
@@ -1624,14 +1625,14 @@ def _bm25_finalize_manifest(spark, path: str, id_col: str) -> "tuple[int, int]":
     # stats above, the file ledger records what is actually on disk
     _bm25_write_manifest(
         spark, path, id_col, int(stats["n_docs"]), avgdl, int(n_postings),
-        _parquet_file_count(spark, f"{path}/postings"),
+        _postings_ledger(spark, path),
     )
     return int(stats["n_docs"]), int(n_postings)
 
 
 def _bm25_write_manifest(
     spark, path: str, id_col: str, n_docs: int, avgdl: float,
-    n_postings: int, n_postings_files: "int | None",
+    n_postings: int, ledger: "tuple[int, int | None] | None",
 ) -> None:
     """The 1-row manifest write shared by the recompute tail
     (`_bm25_finalize_manifest`) and the O(new shard) arithmetic update
@@ -1643,29 +1644,34 @@ def _bm25_write_manifest(
     The manifest is control-plane metadata; it must not ride the data
     plane.
 
-    `n_postings_files` is the postings FILE ledger (r13 optimization
-    round, guide §1.2 — the r12 "Not yet optimized" #2 item):
-    `load_bm25_index` validates against it with one O(1) globStatus
-    listing instead of a Spark footer-count job whose listing cost
-    grows with accumulated append count.  The value is the CALLER's
-    responsibility, because the tear-detection contract depends on how
-    it is derived: writers into a FRESH directory (save / merge /
-    compact / the verify recompute) record the on-disk count after
-    their own writes, while `append_bm25_index` must record
-    old-ledger + this-append's-delta — counting the directory there
-    would silently adopt a previous tear's orphan files into the
-    ledger and heal what must stay loudly broken.  None (legacy index
-    whose manifest predates the ledger) keeps the row-count validation
-    path at load."""
+    `ledger` is the postings FILE ledger (r13 optimization round, guide
+    §1.2 — the r12 "Not yet optimized" #2 item): (file count, total
+    bytes) as `_postings_ledger` reads them.  `load_bm25_index`
+    validates against it with one O(1) globStatus listing and one
+    content summary instead of a Spark footer-count job whose listing
+    cost grows with accumulated append count; the byte total catches
+    a torn re-save that happens to leave the same NUMBER of files.  The
+    value is the CALLER's responsibility, because the tear-detection
+    contract depends on how it is derived: writers into a FRESH
+    directory (save / merge / compact / the verify recompute) record
+    the on-disk count after their own writes, while `append_bm25_index`
+    must record old-ledger + this-append's-delta — counting the
+    directory there would silently adopt a previous tear's orphan files
+    into the ledger and heal what must stay loudly broken.  None (legacy
+    index whose manifest predates the ledger) keeps the row-count
+    validation path at load; a byte total of None (manifest from before
+    the byte ledger) keeps the count-only check."""
     from noaa_oracle_spark.pipeline.metaio import write_meta_rows
 
+    n_files, n_bytes = ledger or (None, None)
     write_meta_rows(
         spark,
         f"{path}/manifest",
         _BM25_MANIFEST_SCHEMA,
         [(
             1, int(n_docs), float(avgdl), int(n_postings), id_col,
-            None if n_postings_files is None else int(n_postings_files),
+            None if n_files is None else int(n_files),
+            None if n_bytes is None else int(n_bytes),
         )],
     )
 
@@ -1763,7 +1769,7 @@ def save_bm25_index(
             spark, path, id_col, n_docs,
             0.0 if n_docs == 0 else tokens / n_docs,
             int(obs_p.get["n_postings"]),
-            _parquet_file_count(spark, f"{path}/postings"),
+            _postings_ledger(spark, path),
         )
     finally:
         tf.unpersist()
@@ -1891,7 +1897,7 @@ def append_bm25_index(
         # of the directory, which would adopt a previous tear's orphan
         # files and heal what must stay loudly broken (the
         # "fast path never heals" contract the tests pin)
-        files_before = _parquet_file_count(spark, f"{path}/postings")
+        files_before, bytes_before = _postings_ledger(spark, path)
         (
             tf.repartition(F.col("term"))
             .observe(obs_p, F.count(F.lit(1)).alias("n_postings"))
@@ -1929,15 +1935,20 @@ def append_bm25_index(
             n_docs = int(meta.n_docs) + int(new_stats["n_docs"])
             tokens = old_tokens + int(new_stats["tokens"] or 0)
             avgdl = 0.0 if n_docs == 0 else tokens / n_docs
-            old_ledger = getattr(meta, "n_postings_files", None)
+            old_files = getattr(meta, "n_postings_files", None)
+            old_bytes = getattr(meta, "postings_bytes", None)
+            ledger = None
+            if old_files is not None:
+                files_after, bytes_after = _postings_ledger(spark, path)
+                ledger = (
+                    int(old_files) + files_after - files_before,
+                    None if old_bytes is None
+                    else int(old_bytes) + bytes_after - bytes_before,
+                )
             _bm25_write_manifest(
                 spark, path, id_col, n_docs, avgdl,
                 int(meta.n_postings) + int(new_stats["n_postings"]),
-                None if old_ledger is None else (
-                    int(old_ledger)
-                    + _parquet_file_count(spark, f"{path}/postings")
-                    - files_before
-                ),
+                ledger,
             )
     finally:
         tf.unpersist()
@@ -2004,14 +2015,20 @@ def load_bm25_index(
         # Spark job whose footer/listing cost grows with accumulated
         # appends.  Manifests from before the ledger (no field / NULL)
         # fall back to the original footer-count job — same raise.
+        # The byte total (when recorded) also catches a torn re-save
+        # that leaves the same number of files.
         n_files_expected = getattr(meta, "n_postings_files", None)
         if n_files_expected is not None:
-            n_files = _parquet_file_count(spark, f"{path}/postings")
-            if n_files != int(n_files_expected):
+            bytes_expected = getattr(meta, "postings_bytes", None)
+            n_files, n_bytes = _postings_ledger(spark, path)
+            if n_files != int(n_files_expected) or (
+                bytes_expected is not None and n_bytes != int(bytes_expected)
+            ):
                 raise ValueError(
-                    f"load_bm25_index: {n_files} postings files != "
-                    f"manifest ledger {int(n_files_expected)} — torn or "
-                    f"partial (re-)save at {path}"
+                    f"load_bm25_index: {n_files} postings files of "
+                    f"{n_bytes} bytes != manifest ledger "
+                    f"{int(n_files_expected)} files of {bytes_expected} "
+                    f"bytes — torn or partial (re-)save at {path}"
                 )
         else:
             n_postings = postings.count()
@@ -2200,8 +2217,20 @@ def merge_bm25_indexes(
     _bm25_write_manifest(
         spark, out_path, id_col, n_docs,
         0.0 if n_docs == 0 else tokens / n_docs, int(n_postings),
-        _parquet_file_count(spark, f"{out_path}/postings"),
+        _postings_ledger(spark, out_path),
     )
+
+
+def _postings_ledger(spark, path: str) -> "tuple[int, int]":
+    """(parquet file count, bytes under the directory) of the index at
+    `path`'s postings — the manifest's file ledger.  The byte total is
+    one Hadoop-FS content summary (a single py4j call, whatever the
+    file count)."""
+    sc = spark.sparkContext
+    jpath = sc._jvm.org.apache.hadoop.fs.Path(f"{path}/postings")
+    fs = jpath.getFileSystem(sc._jsc.hadoopConfiguration())
+    n_bytes = int(fs.getContentSummary(jpath).getLength())
+    return _parquet_file_count(spark, f"{path}/postings"), n_bytes
 
 
 def _parquet_file_count(spark, path: str) -> int:
@@ -2319,12 +2348,13 @@ def compact_bm25_index(spark, path: str, out_path: str) -> "dict":
     # count mismatch (postings are written first on every append path)
     # and fails the check above before this line runs.
     n_docs = int(idx["manifest"].n_docs)
-    files_after = _parquet_file_count(spark, f"{out_path}/postings")
+    ledger = _postings_ledger(spark, out_path)
+    files_after = ledger[0]
     _bm25_write_manifest(
         spark, out_path, id_col, n_docs,
         float(idx["manifest"].avgdl),
         int(n_postings),
-        files_after,
+        ledger,
     )
     return {
         "postings_files_before": files_before,

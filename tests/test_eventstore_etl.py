@@ -151,7 +151,7 @@ def test_store_validations(spark, store):
 
 def test_read_recovers_parked_snapshot(spark, tmp_path):
     """Crash between the publication renames leaves only `.old`; the next
-    read must restore it instead of silently serving an empty table."""
+    open must restore it instead of silently serving an empty table."""
     import os
 
     from noaa_oracle_spark.eventstore.store import EventStore
@@ -166,6 +166,46 @@ def test_read_recovers_parked_snapshot(spark, tmp_path):
     )
     p = store._table_path("events")
     os.rename(p, p + ".old")  # simulate death mid-publication
-    got = store.read("events").collect()
+    got = EventStore(spark, store.path).read("events").collect()
     assert len(got) == 1 and got[0]["id"] == ev
     assert not os.path.exists(p + ".old")
+
+
+def test_open_reads_a_spark_written_table(spark, tmp_path):
+    """Stores written before the Arrow snapshots hold each table as a Spark
+    output directory (`part-*.snappy.parquet` plus `_SUCCESS`); they must
+    reopen with the same rows and accept mutations on top."""
+    import os
+
+    from noaa_oracle_spark.eventstore.store import _TABLES
+
+    path = str(tmp_path / "spark_written")
+    ev = uuid_v7_at("2024-08-10T16:00:00Z")
+    entry = uuid_v7_at("2024-08-10T16:30:00Z")
+    rows = {
+        "events": [(
+            ev, 4, 1, 3, 2_000_000_000, 1_700_000_000, 1_700_086_400,
+            ["KATL", "KBOS"], "pub", b"\x00\x01", None, b"sig",
+            ["temp_high"],
+        )],
+        "events_entries": [(entry, ev, 7, 3)],
+        "expected_observations": [
+            (entry, "KATL", None, "over", None, None, None, None, None),
+        ],
+    }
+    layout = EventStore(spark, path)
+    for table, data in rows.items():
+        p = layout._table_path(table)
+        spark.createDataFrame(data, _TABLES[table]).coalesce(1).write.parquet(p)
+        names = sorted(os.listdir(p))
+        assert "_SUCCESS" in names
+        assert any(n.startswith("part-") and n.endswith(".snappy.parquet")
+                   for n in names)
+
+    store = EventStore(spark, path)
+    for table, data in rows.items():
+        want = spark.createDataFrame(data, _TABLES[table]).collect()
+        assert store.read(table).collect() == want, table
+    store.update_entry_scores([(entry, 9, None)])
+    (got,) = EventStore(spark, path).event_entries(ev).collect()
+    assert (got["score"], got["base_score"]) == (9, 3)

@@ -31,6 +31,7 @@ from noaa_oracle_spark.pipeline.pq import (
 )
 from noaa_oracle_spark.pipeline.text import (
     _parquet_file_count,
+    _postings_ledger,
     append_bm25_index,
     load_bm25_index,
     save_bm25_index,
@@ -143,6 +144,7 @@ def test_bm25_ledger_matches_disk_and_rows(spark, docs, tmp_path):
     assert int(meta.n_postings_files) == _parquet_file_count(
         spark, f"{path}/postings"
     )
+    assert int(meta.postings_bytes) == _postings_ledger(spark, path)[1]
     assert spark.read.parquet(f"{path}/postings").count() == int(
         meta.n_postings
     )
@@ -175,6 +177,54 @@ def test_bm25_legacy_manifest_falls_back_to_row_count(
     ).write.mode("append").parquet(f"{path}/postings")
     with pytest.raises(ValueError, match="torn or partial"):
         load_bm25_index(spark, path)
+
+
+def test_bm25_count_only_ledger_still_validates(spark, docs, tmp_path):
+    """A manifest from before the byte ledger (file count only) loads and
+    appends through the count check, and still rejects an orphan file."""
+    from noaa_oracle_spark.pipeline.metaio import (
+        read_meta_rows,
+        write_meta_rows,
+    )
+
+    path = str(tmp_path / "bcount")
+    save_bm25_index(docs.filter(F.col("doc_id") < 50), path)
+    meta = read_meta_rows(spark, f"{path}/manifest")[0]
+    write_meta_rows(
+        spark, f"{path}/manifest",
+        "format_version int, n_docs long, avgdl double, "
+        "n_postings long, id_col string, n_postings_files long",
+        [(1, meta.n_docs, meta.avgdl, meta.n_postings, meta.id_col,
+          meta.n_postings_files)],
+    )
+    append_bm25_index(spark, path, docs.filter(F.col("doc_id") >= 50))
+    meta = load_bm25_index(spark, path)["manifest"]
+    assert meta.postings_bytes is None and meta.n_docs == 90
+    spark.createDataFrame(
+        [(9999, "zeta", 1)], "doc_id long, term string, tf long"
+    ).write.mode("append").parquet(f"{path}/postings")
+    with pytest.raises(ValueError, match="torn or partial"):
+        load_bm25_index(spark, path)
+
+
+def test_spread_keeps_a_wide_frame_when_the_footer_probe_fails(
+    spark, tmp_path, monkeypatch
+):
+    """A frame already wide from a repartition but scanned from one file
+    keeps the width check's verdict when its footer cannot be read."""
+    from noaa_oracle_spark.pipeline import metaio
+    from noaa_oracle_spark.pipeline.dedup import spread
+
+    src = str(tmp_path / "one_file")
+    spark.range(10).coalesce(1).write.parquet(src)
+    par = spark.sparkContext.defaultParallelism
+    wide = spark.read.parquet(src).repartition(par + 1)
+
+    def broken(_spark, _path):
+        raise OSError("footer unreadable")
+
+    monkeypatch.setattr(metaio, "footer_row_group_count", broken)
+    assert spread(wide) is wide
 
 
 # ---------------------------------------------------------------------------

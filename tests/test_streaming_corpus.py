@@ -375,7 +375,7 @@ def test_bm25_index_sink_torn_index_raises_not_overwrites(spark, tmp_path):
     torn = spark.createDataFrame(
         [(1, int(meta.n_docs), float(meta.avgdl),
           int(meta.n_postings) + 2, str(meta.id_col),
-          int(meta.n_postings_files) + 1)],
+          int(meta.n_postings_files) + 1, int(meta.postings_bytes))],
         _BM25_MANIFEST_SCHEMA,
     )
     torn.write.mode("overwrite").parquet(f"{path}/manifest")
