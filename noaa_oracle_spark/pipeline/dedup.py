@@ -58,11 +58,15 @@ def spread(df: DataFrame) -> DataFrame:
     Inputs with >= par files, non-parquet sources, and non-file frames
     keep the width check's verdict untouched, and so does a footer probe
     that fails (a stale or unreadable file is inconclusive, not a reason
-    to rebalance a frame the width check already found wide)."""
+    to rebalance a frame the width check already found wide).  A frame
+    whose rows all reach this point through a shuffle is not probed:
+    its width is the exchange's, whatever the scan's row groups were."""
     spark = df.sparkSession
     par = spark.sparkContext.defaultParallelism
     try:
         if df.rdd.getNumPartitions() >= par:
+            if _shuffled(df._jdf.queryExecution().executedPlan()):
+                return df
             files = df.inputFiles()
             if not files or len(files) >= par:
                 return df
@@ -86,6 +90,24 @@ def spread(df: DataFrame) -> DataFrame:
     except Exception:
         pass
     return df.repartition(par)
+
+
+def _shuffled(plan) -> bool:
+    """Whether every row of a physical plan's output passed through a
+    shuffle exchange, i.e. its partitions are the exchange's and not the
+    scan's splits. A broadcast side does not carry the output's
+    partitioning, so it is not followed."""
+    name = plan.nodeName()
+    if name == "AdaptiveSparkPlan":  # its current plan, initial or final
+        return _shuffled(plan.executedPlan())
+    if name == "ResultQueryStage":
+        return _shuffled(plan.plan())
+    if name in ("Exchange", "ReusedExchange", "ShuffleQueryStage"):
+        return True
+    children = plan.children()
+    kids = [children.apply(i) for i in range(children.size())]
+    kids = [k for k in kids if k.nodeName() != "BroadcastExchange"]
+    return bool(kids) and all(_shuffled(k) for k in kids)
 
 
 def _word_shingles(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id",

@@ -23,14 +23,23 @@ Plan-shape notes for 100 TB:
     and the daily sums all hash-partition on the same prefix.
   - The correlated scalar subquery fallback (weather_data.rs:314-343) is
     decorrelated into a groupBy-min join — deterministic, no nested-loop.
+
+Request-invariant Column expressions (the aggregate lists, the precip
+classifier, the per-unit conversions) are built once per process by
+`functools.cache` builders: each Column costs py4j round trips, about
+0.1 s of plan building per dashboard request on a 4-core host. A Column is
+an unresolved expression tree, not bound to a plan or session, so one
+instance serves every request; `alias` takes a fresh expression id at each
+use. Filters on the request's stations and window are built per request.
 """
 
 from __future__ import annotations
 
+import functools
 from collections.abc import Sequence
 from datetime import datetime, timedelta, timezone
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from noaa_oracle_spark.functions.weather import (
@@ -86,23 +95,26 @@ def _obs_filtered(
     return df
 
 
-def _with_precip_type(df: DataFrame) -> DataFrame:
+@functools.cache
+def _precip_type() -> Column:
     """CASE chain classifying each observation's precip type
     (weather_data.rs:514-530)."""
-    return df.withColumn(
-        "precip_type",
-        classify_precip(F.col("wx_string"), F.col("temperature_value")),
-    )
+    return classify_precip(F.col("wx_string"), F.col("temperature_value"))
 
 
-def _obs_aggs() -> list:
+def _with_precip_type(df: DataFrame) -> DataFrame:
+    return df.withColumn("precip_type", _precip_type())
+
+
+@functools.cache
+def _obs_aggs() -> tuple[Column, ...]:
     """The shared aggregate list of observation_data / daily_observations
     (weather_data.rs:531-554, :655-673)."""
     t = F.col("temperature_value")
     w = F.col("wind_speed")
     d = F.col("wind_direction")
     p = F.col("precip_in")
-    return [
+    return (
         F.min(t).alias("temp_low"),
         F.max(t).alias("temp_high"),
         F.max(F.when(in_range(w, 0, 500), w)).alias("wind_speed"),
@@ -121,7 +133,7 @@ def _obs_aggs() -> list:
         F.sum(
             F.when(p.isNotNull() & (p >= 0) & (F.col("precip_type") == "ice"), p)
         ).alias("ice_amt"),
-    ]
+    )
 
 
 def observation_data(
@@ -147,7 +159,7 @@ def observation_data(
         end_expr.alias("end_time"),
         *_obs_aggs(),
     )
-    return _convert_obs_temps(out, temperature_unit)
+    return _convert_temps(out, temperature_unit)
 
 
 def daily_observations(
@@ -168,23 +180,28 @@ def daily_observations(
         .groupBy("station_id", "date")
         .agg(*_obs_aggs())
     )
-    return _convert_obs_temps(out, temperature_unit)
+    return _convert_temps(out, temperature_unit)
 
 
-def _convert_obs_temps(df: DataFrame, unit: str | None) -> DataFrame:
+@functools.cache
+def _unit_columns(unit: str) -> dict[str, Column]:
+    """temp_low / temp_high / temperature_unit_code converted to `unit`.
+    The dict is shared by every caller; read it, never mutate it."""
+    u = F.col("temperature_unit_code")
+    return {
+        "temp_low": temp_to_unit(F.col("temp_low"), u, unit),
+        "temp_high": temp_to_unit(F.col("temp_high"), u, unit),
+        "temperature_unit_code": F.lit(unit),
+    }
+
+
+def _convert_temps(df: DataFrame, unit: str | None) -> DataFrame:
     """Temperature conversion applied in-plan (the reference converts after
     Arrow decode, weather_data.rs:1234-1262; doing it as Column expressions
     keeps it inside codegen)."""
     if unit is None:
         return df
-    u = F.col("temperature_unit_code")
-    return df.withColumns(
-        {
-            "temp_low": temp_to_unit(F.col("temp_low"), u, unit),
-            "temp_high": temp_to_unit(F.col("temp_high"), u, unit),
-            "temperature_unit_code": F.lit(unit),
-        }
-    )
+    return df.withColumns(_unit_columns(unit))
 
 
 # ---------------------------------------------------------------------------
@@ -260,9 +277,7 @@ def _best_duration(
     ).select("station_id", "date", "duration_secs")
 
 
-def _daily_field(
-    rows: DataFrame, field: str, aggs: list
-) -> DataFrame:
+def _daily_field(rows: DataFrame, field: str) -> DataFrame:
     """SUM a precip field at its native duration with fallback to the
     shortest available duration (weather_data.rs:309-345). The correlated
     scalar subquery `(SELECT MIN(duration) ... WHERE same station/date)` is
@@ -282,7 +297,65 @@ def _daily_field(
             == F.coalesce(F.col("best_duration"), F.col("fallback_duration"))
         )
     )
-    return picked.groupBy("station_id", "date").agg(*aggs)
+    return picked.groupBy("station_id", "date").agg(*_precip_aggs()[field])
+
+
+@functools.cache
+def _precip_aggs() -> dict[str, tuple[Column, ...]]:
+    """Per precip field, its daily aggregates at the picked duration
+    (weather_data.rs:309-345)."""
+    qpf = F.col("liquid_precipitation_amt")
+    sa, sr = F.col("snow_amt"), F.col("snow_ratio")
+    ia = F.col("ice_amt")
+    return {
+        "liquid_precipitation_amt": (
+            F.sum(F.when(qpf.isNotNull() & (qpf >= 0), qpf)).alias("total_qpf"),
+        ),
+        "snow_amt": (
+            F.sum(F.when(sa.isNotNull() & (sa >= 0), sa)).alias("snow_amt"),
+            F.avg(F.when(sr.isNotNull() & (sr > 0), sr)).alias("avg_snow_ratio"),
+        ),
+        "ice_amt": (
+            F.sum(F.when(ia.isNotNull() & (ia >= 0), ia)).alias("ice_amt"),
+        ),
+    }
+
+
+@functools.cache
+def _forecast_daily_aggs() -> tuple[Column, ...]:
+    """The per-(station, day) forecast aggregates with the reference's
+    range guards (weather_data.rs:365-373)."""
+    mt, xt = F.col("min_temp"), F.col("max_temp")
+    w, d = F.col("wind_speed"), F.col("wind_direction")
+    hx, hn = F.col("relative_humidity_max"), F.col("relative_humidity_min")
+    pc = F.col("twelve_hour_probability_of_precipitation")
+    return (
+        F.min("begin_time").alias("start_time"),
+        F.max("end_time").alias("end_time"),
+        F.min(F.when(in_range(mt, -200, 200), mt)).alias("temp_low"),
+        F.max(F.when(in_range(xt, -200, 200), xt)).alias("temp_high"),
+        F.max(F.when(in_range(w, 0, 500), w)).alias("wind_speed"),
+        F.max(F.when(in_range(d, 0, 360), d)).alias("wind_direction"),
+        F.max(F.when(in_range(hx, 0, 100), hx)).alias("humidity_max"),
+        F.min(F.when(in_range(hn, 0, 100), hn)).alias("humidity_min"),
+        F.max("temperature_unit_code").alias("temperature_unit_code"),
+        F.max(F.when(pc.isNotNull(), pc)).alias("precip_chance"),
+    )
+
+
+@functools.cache
+def _forecast_rain() -> Column:
+    """Rain derived from QPF less snow water and ice
+    (weather_data.rs:377-401)."""
+    return F.greatest(
+        F.lit(0.0),
+        F.coalesce(
+            F.col("total_qpf")
+            - (F.col("dp_snow_amt") / F.nullif(F.col("avg_snow_ratio"), F.lit(0.0)))
+            - F.coalesce(F.col("dp_ice_amt"), F.lit(0.0)),
+            F.col("total_qpf") - F.coalesce(F.col("dp_ice_amt"), F.lit(0.0)),
+        ),
+    )
 
 
 def forecasts_data(
@@ -356,27 +429,9 @@ def forecasts_data(
         )
     )
 
-    qpf = F.col("liquid_precipitation_amt")
-    daily_qpf = _daily_field(
-        precip_rows,
-        "liquid_precipitation_amt",
-        [F.sum(F.when(qpf.isNotNull() & (qpf >= 0), qpf)).alias("total_qpf")],
-    )
-    sa, sr = F.col("snow_amt"), F.col("snow_ratio")
-    daily_snow = _daily_field(
-        precip_rows,
-        "snow_amt",
-        [
-            F.sum(F.when(sa.isNotNull() & (sa >= 0), sa)).alias("snow_amt"),
-            F.avg(F.when(sr.isNotNull() & (sr > 0), sr)).alias("avg_snow_ratio"),
-        ],
-    )
-    ia = F.col("ice_amt")
-    daily_ice = _daily_field(
-        precip_rows,
-        "ice_amt",
-        [F.sum(F.when(ia.isNotNull() & (ia >= 0), ia)).alias("ice_amt")],
-    )
+    daily_qpf = _daily_field(precip_rows, "liquid_precipitation_amt")
+    daily_snow = _daily_field(precip_rows, "snow_amt")
+    daily_ice = _daily_field(precip_rows, "ice_amt")
 
     # FULL OUTER join chain with key coalescing (weather_data.rs:347-358).
     # Spark's USING-column full outer join coalesces the keys for us.
@@ -384,25 +439,10 @@ def forecasts_data(
         daily_snow, ["station_id", "date"], "full_outer"
     ).join(daily_ice, ["station_id", "date"], "full_outer")
 
-    mt, xt = F.col("min_temp"), F.col("max_temp")
-    w, d = F.col("wind_speed"), F.col("wind_direction")
-    hx, hn = F.col("relative_humidity_max"), F.col("relative_humidity_min")
-    pc = F.col("twelve_hour_probability_of_precipitation")
     daily_forecasts = (
         deduped.withColumn("date", _day_text(F.col("begin_ts")))
         .groupBy("station_id", "date")
-        .agg(
-            F.min("begin_time").alias("start_time"),
-            F.max("end_time").alias("end_time"),
-            F.min(F.when(in_range(mt, -200, 200), mt)).alias("temp_low"),
-            F.max(F.when(in_range(xt, -200, 200), xt)).alias("temp_high"),
-            F.max(F.when(in_range(w, 0, 500), w)).alias("wind_speed"),
-            F.max(F.when(in_range(d, 0, 360), d)).alias("wind_direction"),
-            F.max(F.when(in_range(hx, 0, 100), hx)).alias("humidity_max"),
-            F.min(F.when(in_range(hn, 0, 100), hn)).alias("humidity_min"),
-            F.max("temperature_unit_code").alias("temperature_unit_code"),
-            F.max(F.when(pc.isNotNull(), pc)).alias("precip_chance"),
-        )
+        .agg(*_forecast_daily_aggs())
     )
 
     # Final projection + window clamp + rain derivation
@@ -415,16 +455,6 @@ def forecasts_data(
     end_col = F.col("end_time")
     if end is not None:
         end_col = F.least(F.lit(_rfc3339(end)), end_col)
-
-    rain = F.greatest(
-        F.lit(0.0),
-        F.coalesce(
-            F.col("total_qpf")
-            - (F.col("dp_snow_amt") / F.nullif(F.col("avg_snow_ratio"), F.lit(0.0)))
-            - F.coalesce(F.col("dp_ice_amt"), F.lit(0.0)),
-            F.col("total_qpf") - F.coalesce(F.col("dp_ice_amt"), F.lit(0.0)),
-        ),
-    )
 
     out = (
         daily_forecasts.join(
@@ -446,18 +476,9 @@ def forecasts_data(
             "humidity_min",
             "temperature_unit_code",
             "precip_chance",
-            rain.alias("rain_amt"),
+            _forecast_rain().alias("rain_amt"),
             F.col("dp_snow_amt").alias("snow_amt"),
             F.col("dp_ice_amt").alias("ice_amt"),
         )
     )
-    if temperature_unit is not None:
-        u = F.col("temperature_unit_code")
-        out = out.withColumns(
-            {
-                "temp_low": temp_to_unit(F.col("temp_low"), u, temperature_unit),
-                "temp_high": temp_to_unit(F.col("temp_high"), u, temperature_unit),
-                "temperature_unit_code": F.lit(temperature_unit),
-            }
-        )
-    return out
+    return _convert_temps(out, temperature_unit)

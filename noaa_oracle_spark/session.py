@@ -42,6 +42,13 @@ def get_spark(
         schema evolution is handled explicitly by the reader (sources/reader.py)
         against a canonical schema instead.
       - Arrow enabled: toPandas()/pandas UDFs transfer columnar batches.
+      - parallelPartitionDiscovery.threshold at its maximum: the snapshot
+        catalog (sources/catalog.py) has already listed every path a read
+        is given, so it is the only listing. At Spark's default of 32
+        paths, a 24 h window (48 paths) re-listed them in a distributed
+        job with one task per path, about 0.4 s per small read on a
+        4-core host. Under the threshold Spark stats the given paths on
+        the driver instead.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     builder = (
@@ -61,6 +68,10 @@ def get_spark(
         # nanos instead of erroring; loaders convert to micros explicitly.
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.sql.parquet.filterPushdown", "true")
+        .config(
+            "spark.sql.sources.parallelPartitionDiscovery.threshold",
+            str(2**31 - 1),
+        )
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")

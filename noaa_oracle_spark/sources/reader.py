@@ -16,7 +16,6 @@ is declared, not inferred.
 
 from __future__ import annotations
 
-import os
 from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
@@ -35,28 +34,24 @@ _KIND_SCHEMAS = {
 # 32-core local session shreds a few MB of hourly snapshot files into ~24
 # splits — each task then pays ~10 ms scheduling for ~100 KB of work, and
 # interactive queries go scheduling-bound (measured 2-4x the whole-query
-# time at the reference's 1x scale). Coalescing to ceil(actual_bytes /
-# 32 MB) — floored at a small parallelism so per-file decode overhead
-# still overlaps — merges splits WITHOUT a shuffle. Scale-safe by
-# construction: at 100 TB the byte-derived target exceeds the scan's
-# split count and coalesce() is a no-op.
-_TARGET_PARTITION_BYTES = int(
-    os.environ.get("SPARK_GRAFT_SCAN_PARTITION_BYTES", str(32 * 1024 * 1024))
-)
-_MIN_SCAN_PARTITIONS = int(
-    os.environ.get("SPARK_GRAFT_SCAN_MIN_PARTITIONS", "8")
-)
+# time at the reference's 1x scale). Coalescing to ceil(bytes / 32 MB) —
+# floored at a small parallelism so per-file decode overhead still
+# overlaps — merges splits WITHOUT a shuffle. Scale-safe by construction:
+# at 100 TB the byte-derived target exceeds the scan's split count and
+# coalesce() is a no-op.
+_TARGET_PARTITION_BYTES = 32 * 1024 * 1024
+_MIN_SCAN_PARTITIONS = 8
 
 
-def _dense_scan(df: DataFrame, paths: Sequence[str]) -> DataFrame:
-    """Coalesce an over-split small scan to byte-proportional density."""
-    try:
-        total = sum(os.path.getsize(p) for p in paths)
-    except OSError:
-        # non-local paths (s3a, hdfs) — their files are split by real
-        # size on the cluster; leave the planner's answer alone
-        return df
-    k = max(_MIN_SCAN_PARTITIONS, -(-total // _TARGET_PARTITION_BYTES))
+def _dense_scan(df: DataFrame) -> DataFrame:
+    """Coalesce an over-split small scan to byte-proportional density.
+
+    The bytes are the relation's `sizeInBytes` statistic: the sum of the
+    leaf files Spark's file index holds for the given paths (the part files
+    of a directory-valued snapshot included), on any filesystem, without
+    another listing or stat."""
+    total = df._jdf.queryExecution().analyzed().stats().sizeInBytes()
+    k = max(_MIN_SCAN_PARTITIONS, -(-int(total) // _TARGET_PARTITION_BYTES))
     return df.coalesce(k)
 
 
@@ -79,7 +74,7 @@ def read_snapshots(
         schema = _KIND_SCHEMAS[kind]
     if not paths:
         return spark.createDataFrame([], schema)
-    df = _dense_scan(spark.read.schema(schema).parquet(*paths), paths)
+    df = _dense_scan(spark.read.schema(schema).parquet(*paths))
     if with_source_file:
         df = df.withColumn("_source_file", F.input_file_name())
     return df

@@ -210,21 +210,43 @@ def test_bm25_count_only_ledger_still_validates(spark, docs, tmp_path):
 def test_spread_keeps_a_wide_frame_when_the_footer_probe_fails(
     spark, tmp_path, monkeypatch
 ):
-    """A frame already wide from a repartition but scanned from one file
-    keeps the width check's verdict when its footer cannot be read."""
+    """A frame already wide without a shuffle (a union of scans) but
+    scanned from one file keeps the width check's verdict when its footer
+    cannot be read."""
     from noaa_oracle_spark.pipeline import metaio
     from noaa_oracle_spark.pipeline.dedup import spread
 
     src = str(tmp_path / "one_file")
     spark.range(10).coalesce(1).write.parquet(src)
     par = spark.sparkContext.defaultParallelism
-    wide = spark.read.parquet(src).repartition(par + 1)
+    one = spark.read.parquet(src)
+    wide = one
+    for _ in range(par):
+        wide = wide.union(one)  # par + 1 scan partitions, no exchange
 
     def broken(_spark, _path):
         raise OSError("footer unreadable")
 
     monkeypatch.setattr(metaio, "footer_row_group_count", broken)
     assert spread(wide) is wide
+
+
+def test_spread_adds_no_exchange_to_a_frame_already_shuffled_wide(
+    spark, tmp_path
+):
+    """A frame scanned from one single-row-group file but already made wide
+    by a shuffle is not probed and gets no second exchange."""
+    from noaa_oracle_spark.pipeline.dedup import spread
+
+    src = str(tmp_path / "one_row_group")
+    spark.range(64).coalesce(1).write.parquet(src)
+    par = spark.sparkContext.defaultParallelism
+    one = spark.read.parquet(src)
+    wide = one.repartition(par + 1)
+    assert wide.rdd.getNumPartitions() >= par
+    assert spread(wide) is wide
+    # the narrow scan itself is still rebalanced
+    assert spread(one).rdd.getNumPartitions() == par
 
 
 # ---------------------------------------------------------------------------
