@@ -1,6 +1,6 @@
 """NOAA fetch-loop parity: token-bucket rate limiting, retrying XML fetch,
 and the hourly collection cycle that lands snapshot parquet through
-sources/writer.
+sources/writer. A cycle runs no Spark job.
 
 Reference behavior mirrored (all in /root/reference/crates/daemon/src):
   - RateLimiter           utils.rs:170-209  (token bucket: capacity 3,
@@ -26,8 +26,9 @@ Engine-side boundary: the HTTP transport is an injected callable so tests
 transport is stdlib urllib with gzip handling — no extra dependencies.
 Parsing, flattening, station attachment, and the parquet sink are the
 already-tested engine paths (sources/xml_ingest, sources/etl_forecast,
-sources/writer), so this module adds ONLY the driver-loop concerns:
-pacing, retries, batching, and filesystem layout.
+sources/writer), all plain Python/Arrow on the rows the parse builds, so
+this module adds ONLY the driver-loop concerns: pacing, retries,
+batching, filesystem layout and logging.
 
 Deliberate deviation: the reference's `refill_tokens` adds
 `min(elapsed*rate, capacity)` without clamping the running total, so a
@@ -41,12 +42,16 @@ back-to-back acquisition patterns.
 from __future__ import annotations
 
 import gzip
+import logging
 import urllib.request
 from collections.abc import Callable, Mapping, Sequence
 from dataclasses import dataclass, field
 from datetime import datetime, timedelta, timezone
 
+import pyarrow as pa
 from pyspark.sql import SparkSession
+
+_LOG = logging.getLogger(__name__)
 
 DEFAULT_USER_AGENT = "noaa-oracle-spark/0.1 (data collection)"
 
@@ -268,17 +273,22 @@ class DaemonConfig:
 
 class CollectionCycle:
     """One `process_data` pass (main.rs:76-130): fetch forecasts and
-    observations through the rate-limited fetcher, run them through the
-    engine's XML→snapshot ETL, and land `{kind}_{ts}.parquet` files in the
+    observations through the rate-limited fetcher, flatten each NDFD
+    document on its own, and land `{kind}_{ts}.parquet` files in the
     catalog's date-dir layout.
 
-    `stations` maps station_id → {latitude, longitude, station_name,
-    state, iata_id} (the coordinates.rs station index); a provider
-    callable can lazily fetch it through the same fetcher."""
+    The cycle runs no Spark job — parse, flatten and write are plain
+    Python/Arrow on the driver — so `spark` may be None. `stations` maps
+    station_id → {latitude, longitude, station_name, state, iata_id,
+    elevation_m} (the coordinates.rs station index); a provider callable
+    can lazily fetch it through the same fetcher. `log` takes progress
+    messages and skipped batches; by default they go to this module's
+    logger at INFO and WARNING. A failed cycle is logged there with its
+    traceback."""
 
     def __init__(
         self,
-        spark: SparkSession,
+        spark: SparkSession | None,
         config: DaemonConfig,
         fetcher: XmlFetcher,
         stations: Mapping[str, Mapping] | Callable[[], Mapping[str, Mapping]],
@@ -288,43 +298,18 @@ class CollectionCycle:
         self.config = config
         self.fetcher = fetcher
         self._stations = stations
-        self.log = log or (lambda _m: None)
+        self.log = log or _LOG.info
+        self._warn = log or _LOG.warning
 
     def station_index(self) -> Mapping[str, Mapping]:
         if callable(self._stations):
             self._stations = dict(self._stations())
         return self._stations
 
-    def _stations_df(self, stations: Mapping[str, Mapping]):
-        """Station registry mapping → the small dimension DataFrame
-        attach_stations broadcasts (coordinates.rs station index shape)."""
-        rows = [
-            (
-                sid,
-                m.get("station_name", ""),
-                m.get("state", ""),
-                m.get("iata_id", ""),
-                float(m["elevation_m"]) if m.get("elevation_m") is not None else None,
-                float(m["latitude"]),
-                float(m["longitude"]),
-            )
-            for sid, m in stations.items()
-        ]
-        return self.spark.createDataFrame(
-            rows,
-            "station_id string, station_name string, state string, "
-            "iata_id string, elevation_m double, latitude double, "
-            "longitude double",
-        )
-
     def run_once(self, now: datetime | None = None) -> dict[str, str]:
         """Returns {"forecasts": path, "observations": path} for the cycle
         (forecasts first, observations second, as main.rs:103-118)."""
-        from noaa_oracle_spark.sources.etl_forecast import (
-            attach_stations,
-            flatten_dwml_readings,
-            to_forecast_rows,
-        )
+        from noaa_oracle_spark.sources.etl_forecast import flatten_dwml
         from noaa_oracle_spark.sources.writer import write_snapshot
         from noaa_oracle_spark.sources.xml_ingest import (
             dwml_to_readings,
@@ -335,44 +320,37 @@ class CollectionCycle:
         stations = self.station_index()
         out: dict[str, str] = {}
 
-        # --- forecasts: one NDFD request per 50-station batch
-        batches = split_stations(stations, self.config.station_batch_size)
-        reading_dfs = []
-        for batch in batches:
-            url = forecast_url(batch, now)
+        # --- forecasts: one NDFD request per 50-station batch, each
+        # document flattened on its own (its points are point1…pointN)
+        tables = []
+        for batch in split_stations(stations, self.config.station_batch_size):
             readings = fetch_batch_with_retry(
                 self.fetcher,
-                url,
-                parse=lambda xml: dwml_to_readings(self.spark, xml, now=now),
+                forecast_url(batch, now),
+                parse=lambda xml: dwml_to_readings(xml, now=now),
                 empty=None,
-                log=self.log,
+                log=self._warn,
             )
             if readings is not None:
-                reading_dfs.append(readings)
-        if reading_dfs:
-            all_readings = reading_dfs[0]
-            for df in reading_dfs[1:]:
-                all_readings = all_readings.unionByName(df)
-            flat = attach_stations(
-                flatten_dwml_readings(all_readings),
-                self._stations_df(stations),
-            )
+                tables.append(flatten_dwml(readings, stations))
+        if tables:
             out["forecasts"] = write_snapshot(
-                to_forecast_rows(flat), self.config.data_dir, "forecasts", now
+                pa.concat_tables(tables), self.config.data_dir, "forecasts",
+                now,
             )
             self.log(f"forecasts written to: {out['forecasts']}")
 
         # --- observations: single cached METAR document for all stations
-        obs_df = fetch_batch_with_retry(
+        obs = fetch_batch_with_retry(
             self.fetcher,
             METAR_CACHE_URL,
-            parse=lambda xml: metar_to_df(self.spark, xml, dict(stations)),
+            parse=lambda xml: metar_to_df(xml, dict(stations)),
             empty=None,
-            log=self.log,
+            log=self._warn,
         )
-        if obs_df is not None:
+        if obs is not None:
             out["observations"] = write_snapshot(
-                obs_df, self.config.data_dir, "observations", now
+                obs, self.config.data_dir, "observations", now
             )
             self.log(f"observations written to: {out['observations']}")
         return out
@@ -384,9 +362,9 @@ class CollectionCycle:
         now_fn: Callable[[], datetime] | None = None,
     ) -> list[dict[str, str]]:
         """The hourly loop (main.rs:51-74): run a cycle, sleep
-        `sleep_interval`, repeat. A cycle that raises is logged and the
-        loop continues (main.rs:67-69). `max_cycles` bounds the loop for
-        tests; None means run until interrupted."""
+        `sleep_interval`, repeat. A cycle that raises is logged with its
+        traceback and the loop continues (main.rs:67-69). `max_cycles`
+        bounds the loop for tests; None means run until interrupted."""
         import time as _time
 
         sleep = sleep or _time.sleep
@@ -397,8 +375,8 @@ class CollectionCycle:
             try:
                 results.append(self.run_once(now_fn()))
                 self.log("Finished processing data, waiting for next run")
-            except Exception as exc:
-                self.log(f"Error processing data: {exc}")
+            except Exception:
+                _LOG.exception("Error processing data")
                 results.append({})
             cycles += 1
             if max_cycles is None or cycles < max_cycles:

@@ -21,7 +21,9 @@ to_timestamp for cross-offset correctness.
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 # Columns present in every observation file (original writer schema).
 _OBS_BASE = [
@@ -112,3 +114,13 @@ STATIONS_SCHEMA = T.StructType(
         T.StructField("longitude", T.DoubleType(), True),
     ]
 )
+
+
+def arrow_table(rows: list[tuple], schema: T.StructType) -> pa.Table:
+    """Rows in `schema`'s column order → an Arrow table in its Arrow types
+    (what the snapshot writer lands)."""
+    target = to_arrow_schema(schema)
+    cols = list(zip(*rows)) if rows else [()] * len(target)
+    return pa.Table.from_arrays(
+        [pa.array(c, f.type) for c, f in zip(cols, target)], schema=target
+    )

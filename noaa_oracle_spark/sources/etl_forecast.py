@@ -1,4 +1,4 @@
-"""DWML flattening as a Spark plan (X5/W3/D4/J9 — daemon parity).
+"""DWML flattening on the driver (X5/W3/D4/J9 — daemon parity).
 
 Reference pipeline (crates/daemon/src/domains/forecasts/download_forecast.rs):
   - time-layout slots → TimeRanges; missing end = next start in the same
@@ -11,21 +11,21 @@ Reference pipeline (crates/daemon/src/domains/forecasts/download_forecast.rs):
   - NDFD locations matched to the station registry by 2-decimal
     lat/lon equality (:1186-1218, J9)
 
-Spark shape: end-estimation is a LEAD window per (location, layout); the
-UTC dedup is dropDuplicates on normalized instants; interval matching is a
-priority join resolved by distinct_on; carry-forward is
-operators.windows.carry_forward (last ignorenulls). Everything shuffles on
-location/station keys only — the natural partitioning at fleet scale.
+Like the reference, this runs in process on one NDFD document at a time:
+the ~10k readings of a 50-station document are already on the driver
+after the parse, so a Spark plan would add only jobs. Each document is
+flattened on its own because every document names its points
+point1…pointN — location keys are unique only within one document.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
-from pyspark.sql.window import Window
+from collections.abc import Mapping
+from datetime import datetime, timedelta, timezone
 
-from noaa_oracle_spark.operators.dedup import distinct_on
-from noaa_oracle_spark.operators.windows import carry_forward
+import pyarrow as pa
+
+from noaa_oracle_spark.schemas import FORECASTS_SCHEMA, arrow_table
 
 # DWML param → output column (value, unit). Mirrors the WeatherForecast
 # row assembly in download_forecast.rs.
@@ -53,189 +53,157 @@ ACCUMULATIVE = {
     "precipitation/liquid", "precipitation/snow", "precipitation/ice",
 }
 
-
-def _with_estimated_ends(readings: DataFrame) -> DataFrame:
-    """estimate_end_time semantics: next start within the same (location,
-    layout), else begin + 3 h.
-
-    Estimated over DISTINCT layout slots, not raw reading rows — several
-    parameters share one layout, and a LEAD over the interleaved rows
-    would land on the same begin (zero-length windows)."""
-    ts = lambda c: F.col(c).cast("timestamp")  # noqa: E731
-    slots = (
-        readings.select(
-            "location_key", "layout_key", "begin_time", "end_time"
-        )
-        .dropDuplicates(["location_key", "layout_key", "begin_time"])
-        .withColumn("begin_ts", ts("begin_time"))
-    )
-    w = Window.partitionBy("location_key", "layout_key").orderBy("begin_ts")
-    slots = slots.select(
-        "location_key",
-        "layout_key",
-        "begin_time",
-        "begin_ts",
-        F.coalesce(
-            ts("end_time"),
-            F.lead("begin_ts").over(w),
-            F.col("begin_ts") + F.expr("INTERVAL 3 HOURS"),
-        ).alias("end_ts"),
-        F.col("end_time").isNotNull().alias("had_end"),
-    )
-    return readings.drop("end_time").join(
-        slots, ["location_key", "layout_key", "begin_time"]
-    )
+# accumulative fields are never carried (download_forecast.rs:636-647)
+_CARRIED = {
+    v for p, (v, _, _) in PARAM_COLUMNS.items() if p not in ACCUMULATIVE
+}
+_CAST = {"long": int, "double": float}
+_THREE_HOURS = timedelta(hours=3)
 
 
-def flatten_dwml_readings(readings: DataFrame) -> DataFrame:
-    """readings (xml_ingest.READINGS_COLUMNS) → canonical forecast rows.
+class _Instants(dict):
+    """RFC3339 string → UTC datetime, parsed once per distinct string.
+    A string without an offset is UTC, as in the engine's UTC session."""
 
-    One row per (location, UTC-distinct time window) with parameter values
-    matched per the reference's interval rules and instantaneous fields
-    carried forward."""
-    r = _with_estimated_ends(readings)
-
-    # D4: the grid — windows deduplicated as UTC instants across layouts.
-    grid = (
-        r.select(
-            "location_key", "station_id", "latitude", "longitude",
-            "generated_at", "begin_ts", "end_ts",
-        )
-        .dropDuplicates(["location_key", "begin_ts", "end_ts"])
-    )
-
-    g = grid.alias("g")
-    d = r.alias("d")
-    # Priority join reproducing get_interval/get_interval_exact:
-    #   1 exact (begin,end); 2 begin-only (layouts without ends);
-    #   3 containing [begin, end) — instantaneous params only.
-    exact = (F.col("d.begin_ts") == F.col("g.begin_ts")) & (
-        F.col("d.end_ts") == F.col("g.end_ts")
-    ) & F.col("d.had_end")
-    begin_only = (~F.col("d.had_end")) & (
-        F.col("d.begin_ts") == F.col("g.begin_ts")
-    )
-    containing = (
-        (F.col("d.begin_ts") <= F.col("g.begin_ts"))
-        & (F.col("g.begin_ts") < F.col("d.end_ts"))
-    )
-    priority = (
-        F.when(exact, 1).when(begin_only, 2).when(containing, 3)
-    )
-    cond = (
-        (F.col("d.location_key") == F.col("g.location_key"))
-        & (
-            F.when(F.col("d.accumulative"), exact | begin_only)
-            .otherwise(exact | begin_only | containing)
-        )
-    )
-    matched = g.join(d, cond, "inner").select(
-        F.col("g.location_key").alias("location_key"),
-        F.col("g.begin_ts").alias("begin_ts"),
-        F.col("g.end_ts").alias("end_ts"),
-        F.col("d.param").alias("param"),
-        F.col("d.value").alias("value"),
-        F.col("d.units").alias("units"),
-        priority.alias("priority"),
-        F.col("d.begin_ts").alias("r_begin"),
-    )
-    best = distinct_on(
-        matched,
-        keys=["location_key", "begin_ts", "end_ts", "param"],
-        order_by=[F.asc("priority"), F.asc("r_begin")],
-    )
-
-    # Pivot params into columns on the grid. Units get per-param aliases
-    # first (max_temp and min_temp share temperature_unit_code), then
-    # coalesce into the canonical unit columns.
-    out = grid
-    for param, (vcol, ucol, typ) in PARAM_COLUMNS.items():
-        p = best.filter(F.col("param") == param).select(
-            "location_key", "begin_ts", "end_ts",
-            F.col("value").cast(typ).alias(vcol),
-            F.col("units").alias(f"__unit_{vcol}"),
-        )
-        out = out.join(p, ["location_key", "begin_ts", "end_ts"], "left")
-    unit_sources: dict[str, list[str]] = {}
-    for _, (vcol, ucol, _) in PARAM_COLUMNS.items():
-        unit_sources.setdefault(ucol, []).append(f"__unit_{vcol}")
-    for ucol, srcs in unit_sources.items():
-        out = out.withColumn(ucol, F.coalesce(*[F.col(s) for s in srcs]))
-    out = out.drop(*[s for srcs in unit_sources.values() for s in srcs])
-
-    # W3: carry instantaneous values forward across the grid; accumulative
-    # fields are never carried (download_forecast.rs:636-647).
-    instantaneous_cols = [
-        vcol
-        for param, (vcol, _, _) in PARAM_COLUMNS.items()
-        if param not in ACCUMULATIVE
-    ]
-    out = carry_forward(
-        out,
-        instantaneous_cols,
-        partition_by=["location_key"],
-        order_by=[F.asc("begin_ts")],
-    )
-    return out
+    def __missing__(self, s: str) -> datetime:
+        t = datetime.fromisoformat(s)
+        t = t.replace(tzinfo=timezone.utc) if t.tzinfo is None else t
+        self[s] = t = t.astimezone(timezone.utc)
+        return t
 
 
-def attach_stations(
-    flattened: DataFrame, stations: DataFrame
-) -> DataFrame:
-    """J9: resolve DWML locations to the station registry by 2-decimal
-    coordinate equality (download_forecast.rs:1186-1218); the registry is a
-    tiny dimension → broadcast."""
-    key = lambda c: F.format_number(F.col(c).cast("double"), 2)  # noqa: E731
-    st = F.broadcast(
-        stations.select(
-            F.col("station_id").alias("st_station_id"),
-            F.col("station_name").alias("st_station_name"),
-            F.col("state").alias("st_state"),
-            F.col("iata_id").alias("st_iata_id"),
-            F.col("elevation_m").alias("st_elevation_m"),
-            key("latitude").alias("lat_key"),
-            key("longitude").alias("lon_key"),
-        )
-    )
-    joined = flattened.withColumn("lat_key", key("latitude")).withColumn(
-        "lon_key", key("longitude")
-    ).join(st, ["lat_key", "lon_key"], "left")
-    return joined.withColumn(
-        "station_id", F.coalesce("station_id", "st_station_id")
-    ).drop("lat_key", "lon_key")
+def _estimated_ends(readings: list[tuple], instant: _Instants) -> dict:
+    """estimate_end_time: (location, layout, begin string) → (end instant,
+    had an end). A missing end is the next start in the same (location,
+    layout), else begin + 3 h — over distinct slots, since several
+    parameters share one layout."""
+    slots: dict[tuple, dict[str, str | None]] = {}
+    for lk, _s, _la, _lo, _p, layout, begin, end, *_ in readings:
+        slots.setdefault((lk, layout), {}).setdefault(begin, end)
+    ends = {}
+    for (lk, layout), by_begin in slots.items():
+        ordered = sorted(by_begin.items(), key=lambda kv: instant[kv[0]])
+        for i, (begin, end) in enumerate(ordered):
+            if end is not None:
+                e = instant[end]
+            elif i + 1 < len(ordered):
+                e = instant[ordered[i + 1][0]]
+            else:
+                e = instant[begin] + _THREE_HOURS
+            ends[(lk, layout, begin)] = (e, end is not None)
+    return ends
 
 
-def to_forecast_rows(flattened: DataFrame) -> DataFrame:
-    """Final projection to the canonical snapshot schema column set
-    (schemas.FORECASTS_SCHEMA order), RFC3339 strings for the times."""
-    rfc = lambda c: F.date_format(F.col(c), "yyyy-MM-dd'T'HH:mm:ssXXX")  # noqa: E731
-    cols = {
-        "station_id": F.col("station_id"),
-        "station_name": F.coalesce(F.col("st_station_name"), F.lit("")),
-        "latitude": F.col("latitude"),
-        "longitude": F.col("longitude"),
-        "generated_at": F.col("generated_at"),
-        "begin_time": rfc("begin_ts"),
-        "end_time": rfc("end_ts"),
-        "state": F.coalesce(F.col("st_state"), F.lit("")),
-        "iata_id": F.coalesce(F.col("st_iata_id"), F.lit("")),
-        "elevation_m": F.col("st_elevation_m"),
-    }
-    from noaa_oracle_spark.schemas import FORECASTS_SCHEMA
+def _best(cands: list[tuple], b: datetime, e: datetime, accumulative: bool):
+    """get_interval priority for one grid window: an exact (begin, end)
+    match, then a begin-only match (a reading with no end of its own),
+    then — instantaneous fields only — the reading containing the
+    window's begin. Ties go to the earliest reading, then to document
+    order. `cands` is sorted by begin: (begin, end, had_end, value,
+    units)."""
+    best, rank = None, 4
+    for c in cands:
+        cb, ce, had_end = c[0], c[1], c[2]
+        if cb > b:
+            break
+        if cb == b and had_end and ce == e:
+            return c
+        if cb == b and not had_end:
+            if rank > 2:
+                best, rank = c, 2
+        elif not accumulative and rank > 3 and b < ce:
+            best, rank = c, 3
+    return best
 
-    select_cols = []
-    flat_cols = set(flattened.columns)
-    for field in FORECASTS_SCHEMA.fields:
-        if field.name in cols:
-            select_cols.append(cols[field.name].alias(field.name))
-        elif field.name in flat_cols:
-            select_cols.append(
-                F.col(field.name).cast(field.dataType).alias(field.name)
+
+def _station_index(stations: Mapping[str, Mapping]) -> dict:
+    """(2-dp lat, 2-dp lon) → the registry stations at that key."""
+    index: dict[tuple[str, str], list[tuple]] = {}
+    for sid, m in stations.items():
+        elev = m.get("elevation_m")
+        key = (f"{float(m['latitude']):.2f}", f"{float(m['longitude']):.2f}")
+        index.setdefault(key, []).append((
+            sid,
+            m.get("station_name") or "",
+            m.get("state") or "",
+            m.get("iata_id") or "",
+            float(elev) if elev is not None else None,
+        ))
+    return index
+
+
+def flatten_dwml(
+    readings: list[tuple], stations: Mapping[str, Mapping]
+) -> pa.Table:
+    """One document's readings (xml_ingest.dwml_to_readings) → canonical
+    forecast rows, as an Arrow table in FORECASTS_SCHEMA.
+
+    One row per (location, UTC-distinct time window, matching station),
+    with parameter values matched per the reference's interval rules and
+    instantaneous fields carried forward per location in (begin, end)
+    order. A location takes its station from the DWML's station-id, else
+    from the registry stations at its 2-decimal coordinates (J9, a left
+    join: every station at the key gets the row); a location with
+    neither is dropped."""
+    instant = _Instants()
+    ends = _estimated_ends(readings, instant)
+
+    # per location: its attributes, its UTC grid (D4) and, per parameter,
+    # its readings as (begin, end, had_end, value, units)
+    meta: dict[str, tuple] = {}
+    grid: dict[str, set] = {}
+    by_param: dict[tuple[str, str], list[tuple]] = {}
+    for (lk, sid, lat, lon, param, layout, begin, _end, value, units,
+         generated_at) in readings:
+        b = instant[begin]
+        e, had_end = ends[(lk, layout, begin)]
+        meta.setdefault(lk, (sid, lat, lon, generated_at))
+        grid.setdefault(lk, set()).add((b, e))
+        by_param.setdefault((lk, param), []).append(
+            (b, e, had_end, value, units))
+    for cands in by_param.values():
+        cands.sort(key=lambda c: c[0])  # stable: document order on ties
+
+    by_key = _station_index(stations)
+    columns = [f.name for f in FORECASTS_SCHEMA.fields]
+    rows = []
+    for lk, (sid, lat, lon, generated_at) in meta.items():
+        key = None if lat is None or lon is None else (
+            f"{lat:.2f}", f"{lon:.2f}")
+        matches = by_key.get(key) or (
+            [(sid, "", "", "", None)] if sid is not None else [])
+        if not matches:
+            continue
+        last: dict[str, object] = {}
+        for b, e in sorted(grid[lk]):
+            row: dict[str, object] = {}
+            for param, (vcol, ucol, typ) in PARAM_COLUMNS.items():
+                c = _best(by_param.get((lk, param), ()), b, e,
+                          param in ACCUMULATIVE)
+                value = None
+                if c is not None:
+                    if c[3] is not None:
+                        value = _CAST[typ](c[3])
+                    if row.get(ucol) is None:  # first in PARAM_COLUMNS
+                        row[ucol] = c[4]
+                if vcol in _CARRIED:  # W3: carry the last non-NULL forward
+                    value = last[vcol] = (
+                        value if value is not None else last.get(vcol))
+                row[vcol] = value
+            row.update(
+                latitude=lat,
+                longitude=lon,
+                generated_at=generated_at,
+                begin_time=b.strftime("%Y-%m-%dT%H:%M:%SZ"),
+                end_time=e.strftime("%Y-%m-%dT%H:%M:%SZ"),
             )
-        else:
-            select_cols.append(
-                F.lit(None).cast(field.dataType).alias(field.name)
-            )
-    return flattened.select(*select_cols).filter(
-        F.col("station_id").isNotNull()
-    )
+            for st_id, name, state, iata_id, elevation_m in matches:
+                row.update(
+                    station_id=sid if sid is not None else st_id,
+                    station_name=name,
+                    state=state,
+                    iata_id=iata_id,
+                    elevation_m=elevation_m,
+                )
+                rows.append(tuple(row.get(c) for c in columns))
+    return arrow_table(rows, FORECASTS_SCHEMA)

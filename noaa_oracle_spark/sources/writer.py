@@ -1,61 +1,44 @@
-"""Snapshot parquet sinks (S6/S7).
+"""Snapshot parquet sink (S6/S7/S9).
 
 The daemon writes one parquet file per hourly snapshot under the date dir
 (crates/daemon/src/main.rs:96-115; observation writer
-download_observations.rs:305-371, forecast writer streams a row group per
-50-station batch, download_forecast.rs:1073-1183).
-
-Spark-first: `df.write.parquet` produces one file per partition — Spark's
-parallel analog of the reference's row-group-per-batch appends. For
-filename-parity with the reference's `{kind}_{ts}.parquet` catalog we
-coalesce(1) and move the single part file into place; at 100 TB the
-`single_file=False` path keeps one *directory* per snapshot with many part
-files, which the catalog treats as one logical snapshot — parallel write,
-same pruning.
+download_observations.rs:305-371, forecast writer
+download_forecast.rs:1073-1183). As there, the rows are already in
+process: pyarrow writes them as one file, and the scheme-agnostic
+filesystem publishes it under the catalog's `{date}/{kind}_{ts}.parquet`
+key. No Spark job runs.
 """
 
 from __future__ import annotations
 
-import glob
 import os
-import shutil
 import tempfile
 from datetime import datetime
 
-from pyspark.sql import DataFrame
+import pyarrow as pa
+import pyarrow.parquet as pq
 
 from noaa_oracle_spark.sources.catalog import snapshot_path
 from noaa_oracle_spark.sources.fs import fs_for
 
 
 def write_snapshot(
-    df: DataFrame,
-    data_dir: str,
-    kind: str,
-    ts: datetime,
-    single_file: bool = True,
+    table: pa.Table, data_dir: str, kind: str, ts: datetime
 ) -> str:
     """Write a snapshot; returns the catalog path.
 
-    single_file=True materializes one part locally, then hands it to the
-    scheme-agnostic filesystem's `put_file` — a rename on local disk, an
-    upload on an object store (the S9 path, file_access.rs upload side);
-    the catalog sees the identical `{date}/{kind}_{ts}.parquet` key either
-    way. single_file=False writes the snapshot as a directory directly via
-    Spark (local or any Hadoop-supported scheme)."""
+    The file is written to a local temp file, then handed to the
+    filesystem's `put_file` — a rename on local disk, an upload on an
+    object store (the S9 path, file_access.rs upload side). The Arrow
+    schema is not stored: readers take the canonical schema from
+    `schemas`."""
     target = snapshot_path(data_dir, kind, ts)
-    if not single_file:
-        df.write.mode("overwrite").parquet(target)
-        return target
-    fs = fs_for(data_dir)
-    tmp = tempfile.mkdtemp(prefix="snapshot_write_")
+    fd, tmp = tempfile.mkstemp(prefix="snapshot_write_", suffix=".parquet")
+    os.close(fd)
     try:
-        tmpdir = os.path.join(tmp, "part")
-        df.coalesce(1).write.mode("overwrite").parquet(tmpdir)
-        part = glob.glob(os.path.join(tmpdir, "part-*.parquet"))
-        if len(part) != 1:
-            raise RuntimeError(f"expected one part file, got {part}")
-        fs.put_file(part[0], target)
+        pq.write_table(table, tmp, store_schema=False)
+        fs_for(data_dir).put_file(tmp, target)
     finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+        if os.path.exists(tmp):
+            os.remove(tmp)
     return target

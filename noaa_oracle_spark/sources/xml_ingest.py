@@ -1,14 +1,14 @@
 """XML ingestion: METAR observation responses and NDFD DWML forecasts.
 
-Driver-side parse (xml.etree) → row lists → `spark.createDataFrame`; the
-reference does the same work with serde-XML on the daemon
-(crates/daemon/src/domains/observations/xml_observation.rs:5-89,
-forecasts/xml_forecast.rs:7-285). Network fetch/gunzip stays out of the
-engine (the daemon's utils.rs fetch layer); callers hand XML strings in.
+Driver-side parse (xml.etree) → row lists, as the reference does with
+serde-XML on the daemon (crates/daemon/src/domains/observations/
+xml_observation.rs:5-89, forecasts/xml_forecast.rs:7-285). METAR rows
+become an Arrow table in the observation schema; DWML readings go on to
+etl_forecast.flatten_dwml. Network fetch/gunzip stays out of the engine
+(the daemon's utils.rs fetch layer); callers hand XML strings in.
 
 Scale note: hourly NOAA payloads are a few MB — parsing is not distributed
-work. For bulk backfills the same parse function can run inside
-mapInPandas over a DataFrame of XML blobs; the row schema is identical.
+work, and neither is anything else the daemon does with them.
 """
 
 from __future__ import annotations
@@ -16,9 +16,9 @@ from __future__ import annotations
 import xml.etree.ElementTree as ET
 from datetime import datetime, timezone
 
-from pyspark.sql import DataFrame, SparkSession
+import pyarrow as pa
 
-from noaa_oracle_spark.schemas import OBSERVATIONS_SCHEMA
+from noaa_oracle_spark.schemas import OBSERVATIONS_SCHEMA, arrow_table
 
 
 def _text(el, tag: str) -> str | None:
@@ -38,14 +38,14 @@ def _i(v: str | None) -> int | None:
     return int(f) if f is not None else None
 
 
-def parse_metar_xml(
+def metar_to_df(
     xml_text: str,
     station_meta: dict[str, dict] | None = None,
-) -> list[tuple]:
-    """METAR `<response><data><METAR>…` → observation rows in canonical
-    column order (xml_observation.rs:41-77 field set; row struct
-    download_observations.rs:96-118). `station_meta` optionally supplies
-    station_name/state/iata_id from the station index
+) -> pa.Table:
+    """METAR `<response><data><METAR>…` → observation rows as an Arrow
+    table in OBSERVATIONS_SCHEMA (xml_observation.rs:41-77 field set; row
+    struct download_observations.rs:96-118). `station_meta` optionally
+    supplies station_name/state/iata_id from the station index
     (daemon/src/coordinates.rs)."""
     root = ET.fromstring(xml_text)
     rows = []
@@ -76,24 +76,14 @@ def parse_metar_xml(
                 _text(m, "wx_string") or "",
             )
         )
-    return rows
-
-
-def metar_to_df(
-    spark: SparkSession,
-    xml_text: str,
-    station_meta: dict[str, dict] | None = None,
-) -> DataFrame:
-    return spark.createDataFrame(
-        parse_metar_xml(xml_text, station_meta), OBSERVATIONS_SCHEMA
-    )
+    return arrow_table(rows, OBSERVATIONS_SCHEMA)
 
 
 # ---------------------------------------------------------------------------
-# DWML → readings rows (input to etl_forecast.flatten_dwml_readings)
+# DWML → readings rows (input to etl_forecast.flatten_dwml)
 # ---------------------------------------------------------------------------
 
-# DWML parameter element → (param name, accumulative?) mapping; mirrors the
+# DWML parameter elements, each read as `{tag}/{type}`; mirrors the
 # reading types of xml_forecast.rs (temperature maximum/minimum, wind-speed
 # sustained, direction wind, probability-of-precipitation 12 hour,
 # humidity maximum/minimum relative, precipitation liquid/snow/ice,
@@ -108,26 +98,16 @@ _PARAM_TAGS = [
     ("winter-weather-outlook", "type"),
 ]
 
-READINGS_COLUMNS = (
-    "location_key string, station_id string, latitude double, "
-    "longitude double, param string, accumulative boolean, "
-    "layout_key string, seq int, begin_time string, end_time string, "
-    "value double, units string, generated_at string"
-)
-
-ACCUMULATIVE_PARAMS = {
-    "precipitation/liquid",
-    "precipitation/snow",
-    "precipitation/ice",
-}
-
-
-def parse_dwml(xml_text: str, now: datetime | None = None) -> list[tuple]:
-    """DWML → one row per (location, parameter, time-layout slot).
+def dwml_to_readings(
+    xml_text: str, now: datetime | None = None
+) -> list[tuple]:
+    """DWML → one row per (location, parameter, time-layout slot):
+    (location_key, station_id, latitude, longitude, param, layout_key,
+    begin_time, end_time, value, units, generated_at).
 
     Time layouts keep their per-slot begin/end strings; end estimation and
-    UTC dedup happen in the Spark plan (etl_forecast), not here — the parse
-    is a flat extraction."""
+    UTC dedup happen in etl_forecast.flatten_dwml, not here — the parse is
+    a flat extraction."""
     root = ET.fromstring(xml_text)
     data = root.find("data")
     if data is None:
@@ -181,14 +161,8 @@ def parse_dwml(xml_text: str, now: datetime | None = None) -> list[tuple]:
                         continue
                     rows.append(
                         (
-                            lk, sid, lat, lon, param,
-                            param in ACCUMULATIVE_PARAMS,
-                            layout_key, i, begin, end, _f(v), units, created,
+                            lk, sid, lat, lon, param, layout_key,
+                            begin, end, _f(v), units, created,
                         )
                     )
     return rows
-
-
-def dwml_to_readings(spark: SparkSession, xml_text: str,
-                     now: datetime | None = None) -> DataFrame:
-    return spark.createDataFrame(parse_dwml(xml_text, now), READINGS_COLUMNS)

@@ -1,14 +1,18 @@
 """Daemon fetch-loop parity: token bucket, retrying fetcher, batching, and
 the hourly collection cycle landing snapshot parquet through
-sources/writer — everything driven from canned XML and virtual clocks, no
-network (crates/daemon/src/utils.rs:93-268, main.rs:51-130,
+sources/writer without a Spark job — everything driven from canned XML and
+virtual clocks, no network (crates/daemon/src/utils.rs:93-268, main.rs:51-130,
 download_forecast.rs:938-1010 / 1220-1256, coordinates.rs:116-135).
 """
 
 from __future__ import annotations
 
+import logging
+import uuid
 from datetime import datetime, timedelta, timezone
+from urllib.parse import parse_qs, urlsplit
 
+import pyarrow.parquet as pq
 import pytest
 
 from noaa_oracle_spark.daemon import (
@@ -23,7 +27,7 @@ from noaa_oracle_spark.daemon import (
     round_to_hour,
     split_stations,
 )
-from tests.test_xml_etl import DWML_XML, METAR_XML
+from tests.test_xml_etl import DWML_XML, METAR_XML, STATIONS
 
 UTC = timezone.utc
 
@@ -226,26 +230,6 @@ def test_batch_retry_exhaustion_returns_empty():
 # Hourly cycle integration: canned XML → snapshot parquet → weather query
 # ---------------------------------------------------------------------------
 
-STATIONS = {
-    "KATL": {
-        "station_name": "Hartsfield",
-        "state": "GA",
-        "iata_id": "ATL",
-        "elevation_m": 313.0,
-        "latitude": 33.63,
-        "longitude": -84.44,
-    },
-    "KBOS": {
-        "station_name": "Logan",
-        "state": "MA",
-        "iata_id": "BOS",
-        "elevation_m": 6.0,
-        "latitude": 42.36,
-        "longitude": -71.01,
-    },
-}
-
-
 def _canned_transport(url, timeout, headers):
     if url == METAR_CACHE_URL:
         return METAR_XML
@@ -299,3 +283,140 @@ def test_hourly_cycle_end_to_end(spark, tmp_path):
         generated_end=t0 + timedelta(days=1),
     ).collect()
     assert {r["station_id"] for r in daily} == {"KATL", "KBOS"}
+
+
+# ---------------------------------------------------------------------------
+# The cycle runs no Spark job, lands every batch, and logs its failures
+# ---------------------------------------------------------------------------
+
+T0 = datetime(2026, 1, 15, 2, 0, tzinfo=UTC)
+
+
+def _cycle(spark, tmp_path, stations=STATIONS, transport=_canned_transport,
+           **config):
+    bucket, _ = _bucket(capacity=100, rate=100.0)
+    return CollectionCycle(
+        spark,
+        DaemonConfig(data_dir=str(tmp_path), **config),
+        XmlFetcher(bucket, transport=transport),
+        stations,
+    )
+
+
+def test_cycle_lands_both_files_without_spark(tmp_path):
+    paths = _cycle(None, tmp_path).run_once(T0)
+    assert set(paths) == {"forecasts", "observations"}
+    fc = pq.read_table(paths["forecasts"])
+    assert set(fc.column("station_id").to_pylist()) == {"KATL", "KBOS"}
+    obs = pq.read_table(paths["observations"])
+    assert sorted(obs.column("station_id").to_pylist()) == ["KATL", "KBOS"]
+
+
+def test_cycle_runs_no_spark_job(spark, tmp_path):
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    group = f"daemon-cycle-{uuid.uuid4().hex}"
+    try:
+        sc.setJobGroup(group, "cycle")
+        paths = _cycle(spark, tmp_path).run_once(T0)
+        assert set(paths) == {"forecasts", "observations"}
+        assert tracker.getJobIdsForGroup(group) == []
+        # the counter sees jobs at all: reading what landed shows up
+        spark.read.parquet(paths["observations"]).count()
+        assert tracker.getJobIdsForGroup(group)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+
+
+# five stations, each with its own forecast high
+BATCHED = {
+    f"K{c * 3}": {
+        "station_name": f"Station {c}",
+        "state": "TX",
+        "iata_id": c * 3,
+        "elevation_m": 100.0 + i,
+        "latitude": 30.0 + i,
+        "longitude": -97.0 - i,
+    }
+    for i, c in enumerate("ABCDE")
+}
+
+
+def _high(lat: float) -> int:
+    return 50 + int(lat)
+
+
+def _batched_transport(url, timeout, headers):
+    """One NDFD document per batch, its points named point1…pointN as
+    NOAA names them, whatever the batch."""
+    if url == METAR_CACHE_URL:
+        return METAR_XML
+    pairs = [p.split(",") for p in
+             parse_qs(urlsplit(url).query)["listLatLon"][0].split(" ")]
+    locs = "".join(
+        f"<location><location-key>point{j + 1}</location-key>"
+        f'<point latitude="{lat}" longitude="{lon}"/></location>'
+        for j, (lat, lon) in enumerate(pairs))
+    params = "".join(
+        f'<parameters applicable-location="point{j + 1}">'
+        '<temperature type="maximum" units="Fahrenheit" time-layout="k-24">'
+        f"<value>{_high(float(lat))}</value></temperature></parameters>"
+        for j, (lat, _lon) in enumerate(pairs))
+    return (
+        '<?xml version="1.0"?><dwml><head><product><creation-date>'
+        "2026-01-15T02:00:00Z</creation-date></product></head><data>"
+        f"{locs}<time-layout><layout-key>k-24</layout-key>"
+        "<start-valid-time>2026-01-15T00:00:00+00:00</start-valid-time>"
+        "<end-valid-time>2026-01-16T00:00:00+00:00</end-valid-time>"
+        f"</time-layout>{params}</data></dwml>"
+    )
+
+
+def test_every_batch_lands_its_own_stations(tmp_path):
+    cycle = _cycle(None, tmp_path, BATCHED, _batched_transport,
+                   station_batch_size=2)
+    paths = cycle.run_once(T0)
+    assert cycle.fetcher.requests_made == 3 + 1  # 2 + 2 + 1 stations, METAR
+    rows = pq.read_table(paths["forecasts"]).to_pylist()
+    got = {r["station_id"]: (r["max_temp"], r["station_name"],
+                             r["latitude"]) for r in rows}
+    assert len(rows) == len(BATCHED)
+    assert got == {
+        sid: (_high(m["latitude"]), m["station_name"], m["latitude"])
+        for sid, m in BATCHED.items()
+    }
+
+
+def test_failed_cycle_is_logged_with_its_traceback(tmp_path, monkeypatch,
+                                                   caplog):
+    from noaa_oracle_spark.sources import writer
+
+    def broken(*_args, **_kw):
+        raise OSError("disk full")
+
+    monkeypatch.setattr(writer, "write_snapshot", broken)
+    clock = iter([T0, T0 + timedelta(hours=1)])
+    with caplog.at_level(logging.ERROR, logger="noaa_oracle_spark.daemon"):
+        results = _cycle(None, tmp_path).run_forever(
+            max_cycles=2, sleep=lambda _s: None, now_fn=lambda: next(clock))
+    assert results == [{}, {}]  # the loop went on after the first failure
+    failed = [r for r in caplog.records
+              if r.getMessage() == "Error processing data"]
+    assert len(failed) == 2
+    assert all(r.exc_info and isinstance(r.exc_info[1], OSError)
+               for r in failed)
+    assert "Traceback" in caplog.text and "OSError: disk full" in caplog.text
+
+
+def test_skipped_batch_is_logged_as_a_warning(tmp_path, caplog):
+    def no_forecasts(url, timeout, headers):
+        if url == METAR_CACHE_URL:
+            return METAR_XML
+        return "<error>Point with latitude 0 is not on an NDFD grid</error>"
+
+    with caplog.at_level(logging.INFO, logger="noaa_oracle_spark.daemon"):
+        paths = _cycle(None, tmp_path, transport=no_forecasts).run_once(T0)
+    assert set(paths) == {"observations"}
+    assert [r.levelname for r in caplog.records
+            if "skipping" in r.getMessage()] == ["WARNING"]

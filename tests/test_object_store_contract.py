@@ -11,6 +11,7 @@ from __future__ import annotations
 import os
 from datetime import datetime, timezone
 
+import pyarrow as pa
 import pytest
 
 from noaa_oracle_spark.sources.catalog import SnapshotCatalog, snapshot_path
@@ -150,12 +151,10 @@ def test_mock_parity_with_local_layout(mock_store, tmp_path):
         assert a == b
 
 
-def test_write_snapshot_uploads_through_fs(mock_store, spark):
-    df = spark.createDataFrame(
-        [(1, "KATL"), (2, "KSEA")], "id long, station_id string"
-    )
+def test_write_snapshot_uploads_through_fs(mock_store):
+    table = pa.table({"id": [1, 2], "station_id": ["KATL", "KSEA"]})
     ts = T(2026, 1, 15, 6)
-    target = write_snapshot(df, BASE, "observations", ts)
+    target = write_snapshot(table, BASE, "observations", ts)
     assert target == snapshot_path(BASE, "observations", ts)
     assert mock_store.objects[target][:4] == b"PAR1"  # real parquet upload
     # and the catalog immediately lists what the writer put there

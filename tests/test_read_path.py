@@ -23,7 +23,6 @@ from noaa_oracle_spark.queries import weather
 from noaa_oracle_spark.schemas import OBSERVATIONS_SCHEMA
 from noaa_oracle_spark.sources import reader
 from noaa_oracle_spark.sources.catalog import SnapshotCatalog, snapshot_path
-from noaa_oracle_spark.sources.writer import write_snapshot
 from tests.weather_fixtures import OBS_NEW_FIELDS, rfc
 
 UTC = timezone.utc
@@ -138,7 +137,7 @@ def test_directory_snapshot_scan_is_sized_by_its_part_files(
     d = str(tmp_path / "dirsnap")
     rows = [r for h in range(24) for r in _obs_rows(h)]
     df = spark.createDataFrame(rows, OBSERVATIONS_SCHEMA).repartition(16)
-    write_snapshot(df, d, "observations", D0, single_file=False)
+    df.write.parquet(snapshot_path(d, "observations", D0))
     paths = SnapshotCatalog(d).all_paths("observations")
     assert len(paths) == 1 and os.path.isdir(paths[0])
 
