@@ -24,7 +24,8 @@ Layout:
     eventstore  single-writer event tables held as Arrow snapshots
     pipeline    training-data ops: dedup (exact/minhash/simhash/jaccard),
                 ANN similarity search, text analysis, multimodal columns
-    streaming   Structured Streaming variants of snapshot ingestion
+    streaming   Structured Streaming corpus ingestion, sessionization and
+                sketches
 """
 
 __version__ = "0.1.0"

@@ -8,11 +8,16 @@ no OLTP layer, and the reference's write volume (≤ 25 entries/event, hourly
 ETL) doesn't need one. The one `EventStore` of a process owns each table as
 an immutable `pyarrow.Table`, loaded once from parquet at open. A mutation
 validates against it in plain Python under the writer lock, writes the new
-table with `pq.write_table`, publishes it with `statedir.publish` and swaps
-the snapshot in one assignment: no Spark job, no parquet re-read. A read
+table with `pq.write_table`, publishes it with `_publish` and swaps the
+snapshot in one assignment: no Spark job, no parquet re-read. A read
 builds its DataFrame from the snapshot it sees (a local relation over no
 file), so a frame taken before a mutation keeps its rows and no read races
 a publication on disk.
+
+Publication never leaves a table without a state: `_publish` parks the live
+directory at `<table>.old`, renames the new one in, then deletes the parked
+copy, and `_recover` (run at open) heals a crash between those steps. Every
+crash point resolves to the old table or the new one.
 
 Event status is never stored — derived from the clock at read time
 (db/mod.rs:513-533), reproduced by `get_status`/`status_column`.
@@ -26,6 +31,7 @@ broadcast them.
 from __future__ import annotations
 
 import os
+import shutil
 import threading
 import uuid as uuidlib
 from datetime import datetime, timezone
@@ -36,8 +42,6 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.pandas.types import to_arrow_schema
-
-from noaa_oracle_spark.incremental import statedir
 
 EVENTS_SCHEMA = T.StructType(
     [
@@ -124,6 +128,28 @@ def status_column(now: datetime | None = None) -> Column:
     )
 
 
+def _recover(state: str) -> None:
+    """Heal a crash between the publication renames: a parked `.old` with
+    no live state is restored; beside a live state it is a leftover of the
+    cleanup, and the live state wins."""
+    old = state + ".old"
+    if not os.path.exists(state) and os.path.exists(old):
+        os.rename(old, state)
+    if os.path.exists(old):
+        shutil.rmtree(old)
+
+
+def _publish(state: str, tmp: str) -> None:
+    """Publish the freshly written directory `tmp` as `state`."""
+    _recover(state)
+    old = state + ".old"
+    if os.path.exists(state):
+        os.rename(state, old)
+    os.rename(tmp, state)
+    if os.path.exists(old):
+        shutil.rmtree(old)
+
+
 def _validate_uuid_v7(s: str) -> None:
     u = uuidlib.UUID(s)
     if u.version != 7:
@@ -148,7 +174,7 @@ class EventStore:
 
     def _load(self, table: str) -> pa.Table:
         p = self._table_path(table)
-        statedir.recover(p)  # heal a crash between publication renames
+        _recover(p)
         if not os.path.exists(p):
             return _ARROW[table].empty_table()
         return pq.read_table(p).cast(_ARROW[table])
@@ -165,15 +191,15 @@ class EventStore:
 
     def _overwrite(self, table: str, data: pa.Table) -> None:
         """Write `data` beside the table and publish it as the new snapshot
-        (`statedir.publish`; the caller holds the writer lock). A `.new`
-        left by a crash holds only the two files rewritten here. The
-        schema is not stored: `_load` casts to `_ARROW`."""
+        (`_publish`; the caller holds the writer lock). A `.new` left by a
+        crash holds only the file rewritten here. The schema is not
+        stored: `_load` casts to `_ARROW`."""
         p = self._table_path(table)
         tmp = p + ".new"
         os.makedirs(tmp, exist_ok=True)
         pq.write_table(data, os.path.join(tmp, "part-00000.parquet"),
                        store_schema=False)
-        statedir.publish(p, tmp, {"rows": data.num_rows})
+        _publish(p, tmp)
 
     def _rows(self, table: str) -> list[dict]:
         return self._snapshot[table].to_pylist()

@@ -78,6 +78,7 @@ the reference's operational API for modest station/window slices.
 from __future__ import annotations
 
 import json
+import logging
 import os
 import posixpath
 import threading
@@ -92,6 +93,7 @@ from pyspark.sql import functions as F
 from noaa_oracle_spark import service
 from noaa_oracle_spark.sources.catalog import parse_snapshot_name
 
+_LOG = logging.getLogger(__name__)
 _TEMPERATURE_UNITS = ("celsius", "fahrenheit")
 
 
@@ -346,6 +348,7 @@ def make_handler(
                     "events_scored": sorted(results),
                 }
         except Exception as exc:  # surfaced via the status poll
+            _LOG.exception("scoring task %d failed", pid)
             with tasks_lock:
                 update_tasks[pid] = {"state": "failed", "error": str(exc)}
 
@@ -446,6 +449,7 @@ def make_handler(
             except BrokenPipeError:
                 pass
             except Exception as exc:  # the handlers' 500 catch-all
+                _LOG.exception("GET %s failed", self.path)
                 self._send_error_text(500, f"internal error: {exc}")
 
         def do_POST(self) -> None:  # noqa: N802 (http.server API)
@@ -493,6 +497,7 @@ def make_handler(
             except BrokenPipeError:
                 pass
             except Exception as exc:
+                _LOG.exception("POST %s failed", self.path)
                 self._send_error_text(500, f"internal error: {exc}")
 
         # ---- /oracle event routes (oracle_routes.rs twins) ----

@@ -5,7 +5,8 @@ Reference layout: `{data_dir}/{YYYY-MM-DD}/{kind}_{RFC3339}.parquet`
 crates/daemon/src/main.rs:96-115). File selection walks date directories,
 parses the RFC3339 timestamp embedded in each filename, and keeps files of
 the requested kind whose snapshot time falls in [start, end]
-(file_access.rs:144-233). Weather queries widen the window by one day of
+(file_access.rs:144-233). A snapshot is one such file, the only form the
+daemon writes. Weather queries widen the window by one day of
 lookback so late-arriving snapshots that still cover the period are included
 (weather_data.rs:95-100, :431-436, :581-584).
 
@@ -13,30 +14,18 @@ Scale notes (100 TB): the directory walk is driver-side metadata work, same
 as the reference — it prunes *before* any scan, so Spark never even lists
 the excluded dates. On object stores the per-date prefixes keep listings
 O(days in window), mirroring file_access.rs:263-329's per-date S3 prefix
-listing. For very long windows, the same layout works as a Hive-partitioned
-`date=YYYY-MM-DD` tree where Catalyst does partition pruning natively —
-`SnapshotCatalog.as_partitioned_path_filter` supports that mode.
+listing.
 """
 
 from __future__ import annotations
 
 import os
 import re
-from dataclasses import dataclass, replace
+from dataclasses import dataclass
 from datetime import date, datetime, timedelta, timezone
 
 _FILENAME_RE = re.compile(
     r"^(?P<kind>observations|forecasts)_(?P<ts>.+)\.parquet$"
-)
-
-# Compacted snapshot: many hourly files merged into one, named with the
-# [min, max] snapshot-ts interval of its sources. Pruning includes it on
-# interval OVERLAP with the query window — never narrower than the union of
-# what its source files would have matched, so compaction can only widen the
-# file set; row-level generated_at predicates (P2/P3) re-narrow exactly.
-_COMPACTED_RE = re.compile(
-    r"^(?P<kind>observations|forecasts)_(?P<lo>.+)__(?P<hi>.+)"
-    r"\.compacted\.parquet$"
 )
 
 
@@ -76,32 +65,17 @@ class SnapshotFile:
     path: str
     kind: str  # "observations" | "forecasts"
     snapshot_ts: datetime
-    # earliest source snapshot for compacted files; == snapshot_ts otherwise
-    snapshot_lo: datetime | None = None
-
-    @property
-    def lo(self) -> datetime:
-        return self.snapshot_lo or self.snapshot_ts
 
 
 def parse_snapshot_name(name: str, kind: str) -> SnapshotFile | None:
     """Parse a catalog basename of `kind`; None if it isn't one."""
-    m = _COMPACTED_RE.match(name)
-    if m and m.group("kind") == kind:
-        try:
-            lo = parse_rfc3339(m.group("lo"))
-            hi = parse_rfc3339(m.group("hi"))
-        except ValueError:
-            return None
-        return SnapshotFile("", kind, hi, lo)
     m = _FILENAME_RE.match(name)
-    if m and m.group("kind") == kind:
-        try:
-            ts = parse_rfc3339(m.group("ts"))
-        except ValueError:
-            return None
-        return SnapshotFile("", kind, ts)
-    return None
+    if m is None or m.group("kind") != kind:
+        return None
+    try:
+        return SnapshotFile("", kind, parse_rfc3339(m.group("ts")))
+    except ValueError:
+        return None
 
 
 #: Per-date prefix listings are issued only for windows up to this many
@@ -159,54 +133,36 @@ class SnapshotCatalog:
         widened = start - timedelta(days=lookback_days)
         dates = self._window_dates(widened.date(), end.date())
         if len(dates) <= MAX_DATE_PREFIXES:
-            snapshots: dict[str, SnapshotFile] = {}
+            files = []
             for d in dates:
                 pfx = self._date_prefix(d)
-                self._collect(snapshots, self.fs.list_prefix(pfx), pfx, kind)
+                files += self._collect(self.fs.list_prefix(pfx), pfx, kind)
         else:
             base = self.data_dir.rstrip("/") + "/"
-            snapshots = {}
-            self._collect(
-                snapshots, self.fs.list_prefix(base), base, kind, dated=True
+            files = self._collect(
+                self.fs.list_prefix(base), base, kind, dated=True
             )
-        files: list[SnapshotFile] = []
-        for path in sorted(snapshots):
-            sf = snapshots[path]
-            # plain snapshot: ts ∈ [widened, end]; compacted: interval
-            # overlap (lo == ts for plain files, so one condition covers
-            # both)
-            if sf.snapshot_ts >= widened and sf.lo <= end:
-                files.append(sf)
-        return files
+        return sorted(
+            (f for f in files if widened <= f.snapshot_ts <= end),
+            key=lambda f: f.path,
+        )
 
     @staticmethod
     def _collect(
-        out: "dict[str, SnapshotFile]",
-        keys: list[str],
-        prefix: str,
-        kind: str,
-        dated: bool = False,
-    ) -> None:
-        """Group flat object keys into LOGICAL snapshots: the path segment
-        right after the (date) prefix names the snapshot — a plain
-        `{name}.parquet` key, or a directory-valued snapshot whose part
-        files share the `{name}/` segment (Spark reads either form from
-        one path). `dated=True` skips one extra `{date}/` segment for
-        base-prefix listings."""
+        keys: list[str], prefix: str, kind: str, dated: bool = False
+    ) -> list[SnapshotFile]:
+        """The snapshot files of `kind` among flat object keys: a
+        `{name}` key right under a date prefix, or a `{date}/{name}` key
+        under the base when `dated`. Deeper keys are not snapshots."""
+        out = []
         for key in keys:
-            rel = key[len(prefix):]
-            parts = rel.split("/")
-            if dated:
-                if len(parts) < 2:
-                    continue
-                name, logical = parts[1], prefix + parts[0] + "/" + parts[1]
-            else:
-                name, logical = parts[0], prefix + parts[0]
-            if logical in out:
+            parts = key[len(prefix):].split("/")
+            if len(parts) != (2 if dated else 1):
                 continue
-            sf = parse_snapshot_name(name, kind)
+            sf = parse_snapshot_name(parts[-1], kind)
             if sf is not None:
-                out[logical] = replace(sf, path=logical)
+                out.append(SnapshotFile(key, kind, sf.snapshot_ts))
+        return out
 
     def list_paths(self, kind: str, start: datetime, end: datetime,
                    lookback_days: int = 1) -> list[str]:
@@ -217,8 +173,5 @@ class SnapshotCatalog:
         snapshots, weather_data.rs:713-733) — the no-window path is the one
         full-base listing, same as grab_file_names' `weather_data/` prefix."""
         base = self.data_dir.rstrip("/") + "/"
-        snapshots: dict[str, SnapshotFile] = {}
-        self._collect(
-            snapshots, self.fs.list_prefix(base), base, kind, dated=True
-        )
-        return sorted(snapshots)
+        files = self._collect(self.fs.list_prefix(base), base, kind, dated=True)
+        return sorted(f.path for f in files)

@@ -41,8 +41,7 @@ class LocalFS:
     def list_prefix(self, prefix: str) -> list[str]:
         """All file keys under `prefix`, recursively — object-store
         semantics exactly: a directory is not an object, its files are
-        (so a directory-valued snapshot lists as its part files, the same
-        keys S3 would hold). Sorted for determinism."""
+        (the same keys S3 would hold). Sorted for determinism."""
         d = strip_file_scheme(prefix).rstrip("/")
         if not os.path.isdir(d):
             return []

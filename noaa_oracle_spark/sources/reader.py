@@ -47,9 +47,8 @@ def _dense_scan(df: DataFrame) -> DataFrame:
     """Coalesce an over-split small scan to byte-proportional density.
 
     The bytes are the relation's `sizeInBytes` statistic: the sum of the
-    leaf files Spark's file index holds for the given paths (the part files
-    of a directory-valued snapshot included), on any filesystem, without
-    another listing or stat."""
+    snapshot files Spark's file index holds for the given paths, on any
+    filesystem, without another listing or stat."""
     total = df._jdf.queryExecution().analyzed().stats().sizeInBytes()
     k = max(_MIN_SCAN_PARTITIONS, -(-int(total) // _TARGET_PARTITION_BYTES))
     return df.coalesce(k)

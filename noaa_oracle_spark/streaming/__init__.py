@@ -14,11 +14,6 @@ from noaa_oracle_spark.streaming.corpus import (
 )
 from noaa_oracle_spark.streaming.sessions import value_capped_sessions
 from noaa_oracle_spark.streaming.sketches import streaming_kmv_distinct
-from noaa_oracle_spark.streaming.snapshots import (
-    stream_snapshots,
-    streaming_daily_observations,
-    streaming_latest_forecasts,
-)
 
 __all__ = [
     "band_verdicts",
@@ -32,10 +27,7 @@ __all__ = [
     "stream_documents",
     "streaming_bm25_index",
     "streaming_minhash_dedup",
-    "stream_snapshots",
-    "streaming_daily_observations",
     "streaming_exact_dedup",
     "streaming_kmv_distinct",
-    "streaming_latest_forecasts",
     "value_capped_sessions",
 ]

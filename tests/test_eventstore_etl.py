@@ -149,26 +149,74 @@ def test_store_validations(spark, store):
     assert tally == {"live": 2}
 
 
-def test_read_recovers_parked_snapshot(spark, tmp_path):
-    """Crash between the publication renames leaves only `.old`; the next
-    open must restore it instead of silently serving an empty table."""
-    import os
-
-    from noaa_oracle_spark.eventstore.store import EventStore
-
-    ev = uuid_v7_at("2024-08-10T15:00:00Z")
-    store = EventStore(spark, str(tmp_path / "events"))
+def _create(store, ev):
     store.create_event(
         ev, total_allowed_entries=4, number_of_places_win=1,
         number_of_values_per_entry=3, signing_date=2_000_000_000,
         start_observation_date=1_700_000_000,
         end_observation_date=1_700_086_400, locations=["KATL"],
     )
+
+
+def _event_ids(spark, path):
+    return {r["id"] for r in EventStore(spark, path).read("events").collect()}
+
+
+def test_read_recovers_parked_snapshot(spark, tmp_path):
+    """A crash between the publication renames leaves only `.old`: the next
+    open must restore it instead of silently serving an empty table, and
+    the reopened store takes the next mutation."""
+    import os
+
+    ev1, ev2 = (uuid_v7_at(f"2024-08-10T1{h}:00:00Z") for h in (5, 6))
+    store = EventStore(spark, str(tmp_path / "events"))
+    _create(store, ev1)
     p = store._table_path("events")
-    os.rename(p, p + ".old")  # simulate death mid-publication
-    got = EventStore(spark, store.path).read("events").collect()
-    assert len(got) == 1 and got[0]["id"] == ev
+    os.rename(p, p + ".old")  # died after parking the live state
+    reopened = EventStore(spark, store.path)
+    assert _event_ids(spark, store.path) == {ev1}
     assert not os.path.exists(p + ".old")
+    _create(reopened, ev2)
+    assert _event_ids(spark, store.path) == {ev1, ev2}
+
+
+def test_live_state_beats_parked_copy(spark, tmp_path):
+    """A crash after publication but before cleanup leaves the live state
+    and `.old`: the live state wins, `.old` is removed, and the reopened
+    store takes the next mutation."""
+    import os
+    import shutil
+
+    ev1, ev2, ev3 = (uuid_v7_at(f"2024-08-10T1{h}:00:00Z") for h in (5, 6, 7))
+    store = EventStore(spark, str(tmp_path / "events"))
+    _create(store, ev1)
+    p = store._table_path("events")
+    parked = str(tmp_path / "parked")
+    shutil.copytree(p, parked)
+    _create(store, ev2)
+    os.rename(parked, p + ".old")  # died before deleting the parked copy
+    reopened = EventStore(spark, store.path)
+    assert _event_ids(spark, store.path) == {ev1, ev2}
+    assert not os.path.exists(p + ".old")
+    _create(reopened, ev3)
+    assert _event_ids(spark, store.path) == {ev1, ev2, ev3}
+
+
+def test_stale_new_dir_is_harmless(spark, tmp_path):
+    """A writer that died mid-write leaves a `.new` holding a torn part
+    file; the next mutation overwrites it and publishes a readable table."""
+    import os
+
+    ev1, ev2 = (uuid_v7_at(f"2024-08-10T1{h}:00:00Z") for h in (5, 6))
+    store = EventStore(spark, str(tmp_path / "events"))
+    _create(store, ev1)
+    p = store._table_path("events")
+    os.makedirs(p + ".new")
+    with open(os.path.join(p + ".new", "part-00000.parquet"), "wb") as fh:
+        fh.write(b"PAR1torn")
+    _create(store, ev2)
+    assert _event_ids(spark, store.path) == {ev1, ev2}
+    assert sorted(os.listdir(os.path.dirname(p))) == ["current.parquet"]
 
 
 def test_open_reads_a_spark_written_table(spark, tmp_path):

@@ -386,6 +386,50 @@ def test_oracle_event_lifecycle_over_sockets(oracle_server):
     assert st == 404
 
 
+def test_5xx_and_failed_update_log_their_tracebacks(
+    spark, tmp_path, monkeypatch, caplog
+):
+    """A 500 and a failed scoring task keep their response shapes and leave
+    the cause, with its traceback, in the server's log."""
+    import logging
+    import time
+
+    from noaa_oracle_spark.eventstore import EventStore
+
+    def stations_fail(*args, **kwargs):
+        raise RuntimeError("stations exploded")
+
+    def events_fail(self, now=None):
+        raise RuntimeError("scoring exploded")
+
+    monkeypatch.setattr(service, "stations_request", stations_fail)
+    monkeypatch.setattr(EventStore, "active_events", events_fail)
+    srv, _ = serve_background(spark, str(tmp_path))
+    base = f"http://127.0.0.1:{srv.server_address[1]}"
+    try:
+        with caplog.at_level(logging.ERROR,
+                             logger="noaa_oracle_spark.http_service"):
+            assert _status_of(f"{base}/stations") == (
+                500, "internal error: stations exploded")
+            _, kicked = _post_json(f"{base}/oracle/update", {})
+            for _ in range(240):
+                task = _get_json(f"{base}{kicked['status']}")
+                if task["state"] != "running":
+                    break
+                time.sleep(0.25)
+    finally:
+        srv.shutdown()
+        srv.server_close()
+    pid = kicked["etl_process_id"]
+    assert task == {"etl_process_id": pid, "state": "failed",
+                    "error": "scoring exploded"}
+    logged = {r.getMessage(): r.exc_info for r in caplog.records
+              if r.name == "noaa_oracle_spark.http_service"}
+    assert str(logged["GET /stations failed"][1]) == "stations exploded"
+    assert str(logged[f"scoring task {pid} failed"][1]) == "scoring exploded"
+    assert caplog.text.count("Traceback") == 2
+
+
 # ---------------------------------------------------------------------------
 # POST /search/knn — serve a saved PQ index (train-once/serve-many)
 # ---------------------------------------------------------------------------

@@ -356,3 +356,19 @@ def test_kmeans_assign_numpy_equals_expr_backend(spark):
         for r in kmeans_assign(pdf, cdf, backend="numpy").collect()
     )
     assert a == b
+
+
+def test_parquet_file_count_escapes_glob_metacharacters(spark, tmp_path):
+    """The globStatus count once treated the PATH as a glob, so an index
+    rooted at a legally-bracketed directory counted 0 files — which would
+    make a sink's compaction baseline 0 and fire a full compaction every
+    microbatch. The prefix is glob-escaped; only the *.parquet suffixes
+    glob."""
+    d = str(tmp_path / "run[1]" / "idx")
+    df = spark.range(10).coalesce(2)
+    df.write.parquet(d)
+    plain = str(tmp_path / "plain")
+    df.write.parquet(plain)
+    want = _parquet_file_count(spark, plain)
+    assert want > 0
+    assert _parquet_file_count(spark, d) == want

@@ -1,86 +1,9 @@
-"""Streaming smoke tests: drive the snapshot file-source stream to
-completion with the memory sink (processAllAvailable) and check results,
-including the stateful latest-wins operator across two microbatches.
+"""Streaming smoke tests: drive a file-source stream to completion with
+the memory sink (processAllAvailable) and check results, including state
+carried across two microbatches.
 """
 
 from __future__ import annotations
-
-import pytest
-
-from noaa_oracle_spark.streaming import (
-    stream_snapshots,
-    streaming_daily_observations,
-    streaming_latest_forecasts,
-)
-from tests.weather_fixtures import (
-    write_forecast_fixtures,
-    write_observation_fixtures,
-)
-
-
-@pytest.fixture(scope="module")
-def stream_dir(tmp_path_factory):
-    d = str(tmp_path_factory.mktemp("stream_weather"))
-    write_observation_fixtures(d)
-    write_forecast_fixtures(d)
-    return d
-
-
-def test_streaming_daily_observations(spark, stream_dir):
-    obs = stream_snapshots(spark, stream_dir, "observations")
-    assert obs.isStreaming
-    agg = streaming_daily_observations(obs)
-    q = (
-        agg.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName("daily_obs_stream")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        rows = spark.sql(
-            "SELECT * FROM daily_obs_stream ORDER BY station_id, date"
-        ).collect()
-    finally:
-        q.stop()
-    assert len(rows) >= 5
-    katl = [r for r in rows if r["station_id"] == "KATL"]
-    assert {r["date"] for r in katl} == {"2026-01-15", "2026-01-16"}
-    d16 = next(r for r in katl if r["date"] == "2026-01-16")
-    assert d16["temp_low"] == -1.0 and d16["n_obs"] == 2
-
-
-def test_streaming_latest_forecasts(spark, stream_dir, tmp_path):
-    """The stateful latest-wins operator: the re-forecast of KATL's 0-6h
-    window (generated hour 3, qpf 0.12, max_temp 45) must supersede both the
-    hour-0 original and the stale hour -1 duplicate."""
-    fc = stream_snapshots(spark, stream_dir, "forecasts")
-    dedup = streaming_latest_forecasts(fc)
-    q = (
-        dedup.writeStream.outputMode("update")
-        .format("memory")
-        .queryName("latest_fc_stream")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        rows = spark.sql("SELECT * FROM latest_fc_stream").collect()
-    finally:
-        q.stop()
-    katl_0_6 = [
-        r
-        for r in rows
-        if r["station_id"] == "KATL"
-        and r["begin_time"] == "2026-01-15T00:00:00Z"
-        and r["end_time"] == "2026-01-15T06:00:00Z"
-    ]
-    # update-mode memory sink appends each state change; the LAST emission
-    # for the key must be the freshest forecast
-    assert katl_0_6, "no emissions for the KATL 0-6h window"
-    freshest = max(katl_0_6, key=lambda r: r["generated_at"])
-    assert freshest["generated_at"] == "2026-01-15T03:00:00Z"
-    assert freshest["max_temp"] == 45
 
 
 def test_streaming_session_window(spark, tmp_path):
