@@ -16,11 +16,12 @@ Layout:
                 merging reader, snapshot writer
     functions   scalar weather expressions (Magnus humidity, METAR precip
                 classification, unit conversion, clamps)
-    operators   reusable relational operators (distinct_on, lead-chains,
-                carry-forward fill, conditional rollups)
-    queries     the four reference weather queries as pure DataFrame functions
+    operators   reusable relational operators (as-of, range, skew and
+                nearest-site joins, lead-chains, carry-forward fill)
+    queries     the four reference weather queries as DataFrame functions;
+                the forecast rollup is one pandas kernel over many stations
     sql         DuckDB-dialect → Spark SQL rewriter for /raw parity
-    scoring     contest scoring kernel + outcome enumeration + winner pick
+    scoring     plain-Python contest grader + outcome enumeration + winner pick
     eventstore  single-writer event tables held as Arrow snapshots
     pipeline    training-data ops: dedup (exact/minhash/simhash/jaccard),
                 ANN similarity search, text analysis, multimodal columns

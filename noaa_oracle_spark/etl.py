@@ -6,16 +6,18 @@ Running/Completed events, then pick winners for Completed events past their
 signing date. Status transitions are derived from the clock, never stored
 (db/mod.rs:513-533).
 
-The weather inputs are DataFrames (from queries.weather over the snapshot
-store, or mocks in tests) — the cycle itself is engine-agnostic about where
-they came from, exactly like the reference's WeatherAccess trait boundary.
+The weather inputs are per-station values, station → {field: value}
+(from the snapshot store's forecast and observation reads, or mocks in
+tests) — the cycle itself is agnostic about where they came from, exactly
+like the reference's WeatherAccess trait boundary. Events, entries and
+choices come from the event store's in-memory snapshot, so the cycle runs
+no Spark job of its own.
 """
 
 from __future__ import annotations
 
+from collections.abc import Mapping
 from datetime import datetime, timezone
-
-from pyspark.sql import DataFrame
 
 from noaa_oracle_spark.eventstore.store import EventStore
 from noaa_oracle_spark.scoring.kernel import score_entries
@@ -24,8 +26,8 @@ from noaa_oracle_spark.scoring.outcomes import get_winning_bytes, select_winners
 
 def run_scoring_cycle(
     store: EventStore,
-    forecasts: DataFrame,
-    observations: DataFrame,
+    forecasts: Mapping[str, Mapping],
+    observations: Mapping[str, Mapping],
     now: datetime | None = None,
     only_event: str | None = None,
 ) -> dict[str, dict]:
@@ -34,7 +36,7 @@ def run_scoring_cycle(
     itself is crypto-gated, scoring/outcomes.py).
 
     `only_event` restricts the cycle to one event id — the HTTP twin's
-    per-event weather pairing (each event's provider frames cover that
+    per-event weather pairing (each event's provider values cover that
     event's own window/stations, oracle.rs:355-430 refreshes weather per
     event the same way).
 
@@ -46,27 +48,23 @@ def run_scoring_cycle(
     now_s = int(now.timestamp())
     results: dict[str, dict] = {}
 
-    active = store.active_events(now).collect()
-    for ev in active:
+    for ev in store.active_events(now):
         if ev["status"] not in ("running", "completed"):
             continue
         if only_event is not None and ev["id"] != only_event:
             continue
-        entries = store.event_entries(ev["id"])
-        if entries.isEmpty():
+        entry_ids, choices = store.entries_and_choices(ev["id"])
+        if not entry_ids:
             continue
-        choices = store.entry_choices(ev["id"])
         scored = score_entries(
-            entries.select(entries.id.alias("entry_id")),
-            choices,
-            forecasts,
-            observations,
+            entry_ids, choices, forecasts, observations,
             tuple(ev["scoring_fields"]),
         )
-        rows = scored.collect()
-        score_list = [
-            (r["entry_id"], r["total_score"], r["base_score"]) for r in rows
-        ]
+        score_list = list(zip(
+            scored["entry_id"].tolist(),
+            scored["total_score"].tolist(),
+            scored["base_score"].tolist(),
+        ))
         store.update_entry_scores(score_list)
         result = {"scores": score_list, "winners": None, "winner_bytes": None}
 

@@ -12,7 +12,8 @@ table with `pq.write_table`, publishes it with `_publish` and swaps the
 snapshot in one assignment: no Spark job, no parquet re-read. A read
 builds its DataFrame from the snapshot it sees (a local relation over no
 file), so a frame taken before a mutation keeps its rows and no read races
-a publication on disk.
+a publication on disk. The scoring cycle's reads (`active_events`,
+`entries_and_choices`) are plain rows of one snapshot, with no Spark job.
 
 Publication never leaves a table without a state: `_publish` parks the live
 directory at `<table>.old`, renames the new one in, then deletes the parked
@@ -34,6 +35,7 @@ import os
 import shutil
 import threading
 import uuid as uuidlib
+from collections import Counter
 from datetime import datetime, timezone
 
 import pyarrow as pa
@@ -389,24 +391,35 @@ class EventStore:
             out = out.limit(int(limit))
         return out
 
-    def active_events(self, now: datetime | None = None) -> DataFrame:
-        """Unsigned events + their entry counts (sqlite.rs:428-483): LEFT
-        join + COUNT + COALESCE(0) — operator J6/A8."""
-        return self._with_entry_counts(now).filter(
-            F.col("attestation_signature").isNull()
-        )
+    def active_events(self, now: datetime | None = None) -> list[dict]:
+        """Unsigned events with their derived status and entry counts
+        (sqlite.rs:428-483), as plain rows of one snapshot."""
+        snap = self._snapshot
+        counts = Counter(snap["events_entries"].column("event_id").to_pylist())
+        return [
+            {
+                **ev,
+                "status": get_status(None, ev["start_observation_date"],
+                                     ev["end_observation_date"], now),
+                "total_entries": counts[ev["id"]],
+            }
+            for ev in snap["events"].to_pylist()
+            if ev["attestation_signature"] is None
+        ]
 
     def event_entries(self, event_id: str) -> DataFrame:
         return self.read("events_entries").filter(F.col("event_id") == event_id)
 
-    def entry_choices(self, event_id: str) -> DataFrame:
-        entries, choices = self._frames(
-            "events_entries", "expected_observations"
-        )
-        ids = entries.filter(F.col("event_id") == event_id).select(
-            F.col("id").alias("entry_id")
-        )
-        return choices.join(ids, "entry_id")
+    def entries_and_choices(self, event_id: str) -> tuple[list[str], list[dict]]:
+        """The event's entry ids and their choices, as plain rows of one
+        snapshot (what the scoring cycle grades)."""
+        snap = self._snapshot
+        ids = [r["id"] for r in snap["events_entries"].to_pylist()
+               if r["event_id"] == event_id]
+        wanted = set(ids)
+        choices = [r for r in snap["expected_observations"].to_pylist()
+                   if r["entry_id"] in wanted]
+        return ids, choices
 
     def status_tally(self, now: datetime | None = None) -> DataFrame:
         """Dashboard status counts (routes/ui/fragments.rs:47-65) — A9."""

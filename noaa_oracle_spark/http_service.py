@@ -43,10 +43,15 @@ fire-and-forget task::spawn contract — returns immediately with the
 etl_process_id (the reference only logs it; the twin also exposes
 GET /oracle/update/{id} so callers can poll running/completed/failed
 instead of scraping logs). Scoring weather defaults to whole-window
-per-station aggregates of the snapshot store's daily rollups
-(min temp_low / max temp_high / max wind / summed precip — the same
-field semantics the scoring kernel pins); tests inject their own
-provider through `weather_provider`, the WeatherAccess-trait seam.
+per-station values from the snapshot store's daily rollups (min temp_low
+/ max temp_high / max wind / summed precip — the same field semantics the
+scoring kernel pins): one forecast scan of the event's stations rolled up
+on the driver by `forecast_rollup`, and one collected daily-observations
+read, as the reference's two DuckDB queries per event (oracle.rs:355-430).
+Events and entries come from the event store's in-memory snapshot and are
+graded in plain Python, so an update runs about three Spark jobs. Tests
+inject their own provider through `weather_provider`, the
+WeatherAccess-trait seam.
 NIP-98 auth stays out-of-engine per SURVEY scoping.
 
 Request/response parity notes (shapes, not transport internals):
@@ -87,10 +92,12 @@ from decimal import Decimal
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 from urllib.parse import parse_qs, unquote, urlsplit
 
+import pandas as pd
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 from noaa_oracle_spark import service
+from noaa_oracle_spark.queries.weather import forecast_rollup, forecast_rows
 from noaa_oracle_spark.sources.catalog import parse_snapshot_name
 
 _LOG = logging.getLogger(__name__)
@@ -188,41 +195,52 @@ def _rows_json(df) -> bytes:
     return json.dumps(out).encode()
 
 
-def _default_weather_provider(spark, data_dir, ev, now=None):
-    """(forecasts, observations) in the scoring kernel's per-station shape,
-    aggregated over the event's observation window from the snapshot
-    store's daily rollups — the engine-side default behind the
-    WeatherAccess seam."""
-    from pyspark.sql import functions as F
+#: How each field of a station's day rows totals over an event's days
+_FORECAST_TOTALS = {
+    "temp_low": "min", "temp_high": "max", "wind_speed": "max",
+    "wind_direction": "max", "rain_amt": "sum", "snow_amt": "sum",
+    "humidity_max": "max",
+}
+_OBSERVED_TOTALS = {
+    "temp_low": "min", "temp_high": "max", "wind_speed": "max",
+    "wind_direction": "max", "rain_amt": "sum", "snow_amt": "sum",
+    "humidity": "max",
+}
 
+
+def _station_totals(days: pd.DataFrame, totals: dict[str, str]) -> dict[str, dict]:
+    """station → {field: total} over the day rows of each station; NULLs
+    are skipped and a station's all-NULL field stays None, as in SQL."""
+    g = days.astype(dict.fromkeys(totals, "float64")).groupby("station_id")
+    out = pd.DataFrame({
+        col: g[col].sum(min_count=1) if how == "sum" else g[col].agg(how)
+        for col, how in totals.items()
+    })
+    return out.astype(object).where(out.notna(), None).to_dict("index")
+
+
+def _default_weather_provider(spark, data_dir, ev, now=None):
+    """(forecasts, observations) as per-station values over the event's
+    observation window, from the snapshot store's daily rollups — the
+    engine-side default behind the WeatherAccess seam. The forecast side
+    is one scan of the event's stations, rolled up on the driver by the
+    same kernel the forecast route runs (`forecast_rollup`); the observed
+    side is one collected daily-observations read."""
     start = datetime.fromtimestamp(
         ev["start_observation_date"], tz=timezone.utc
     )
     end = datetime.fromtimestamp(ev["end_observation_date"], tz=timezone.utc)
     locs = list(ev["locations"])
-    fc = service.forecasts_request(
-        spark, data_dir, station_ids=locs, start=start, end=end, now=now
-    ).groupBy("station_id").agg(
-        F.min("temp_low").alias("temp_low"),
-        F.max("temp_high").alias("temp_high"),
-        F.max("wind_speed").alias("wind_speed"),
-        F.max("wind_direction").alias("wind_direction"),
-        F.sum("rain_amt").alias("rain_amt"),
-        F.sum("snow_amt").alias("snow_amt"),
-        F.max("humidity_max").alias("humidity_max"),
+    scan = service._read(spark, data_dir, "forecasts", start, end)
+    fc_days = forecast_rollup(
+        forecast_rows(scan, locs, start, end, now=now).toPandas(), start, end
     )
     ob = service.daily_observations_request(
         spark, data_dir, station_ids=locs, start=start, end=end
-    ).groupBy("station_id").agg(
-        F.min("temp_low").alias("temp_low"),
-        F.max("temp_high").alias("temp_high"),
-        F.coalesce(F.max("wind_speed"), F.lit(0)).alias("wind_speed"),
-        F.max("wind_direction").alias("wind_direction"),
-        F.sum("rain_amt").alias("rain_amt"),
-        F.sum("snow_amt").alias("snow_amt"),
-        F.max("humidity").alias("humidity"),
     )
-    return fc, ob
+    ob_days = pd.DataFrame(ob.collect(), columns=ob.columns)
+    return (_station_totals(fc_days, _FORECAST_TOTALS),
+            _station_totals(ob_days, _OBSERVED_TOTALS))
 
 
 def make_handler(
@@ -333,7 +351,7 @@ def make_handler(
             store = get_store()
             now = datetime.now(timezone.utc)
             results: dict = {}
-            for ev in store.active_events(now).collect():
+            for ev in store.active_events(now):
                 if ev["status"] not in ("running", "completed"):
                     continue
                 fc, ob = provider(spark, data_dir, ev, now)

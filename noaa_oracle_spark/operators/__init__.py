@@ -1,5 +1,4 @@
 from noaa_oracle_spark.operators.asof import asof_join
-from noaa_oracle_spark.operators.dedup import distinct_on
 from noaa_oracle_spark.operators.rangejoin import binned_range_join
 from noaa_oracle_spark.operators.skew import salted_join
 from noaa_oracle_spark.operators.windows import carry_forward, with_lead
@@ -8,7 +7,6 @@ __all__ = [
     "asof_join",
     "binned_range_join",
     "carry_forward",
-    "distinct_on",
     "salted_join",
     "with_lead",
 ]

@@ -1,4 +1,4 @@
-"""The four reference weather queries as pure DataFrame functions.
+"""The four reference weather queries as DataFrame functions.
 
 Parity targets (all in /root/reference/crates/oracle/src/db/weather_data.rs):
   - stations            :713-752   (DISTINCT station dimension)
@@ -8,9 +8,9 @@ Parity targets (all in /root/reference/crates/oracle/src/db/weather_data.rs):
                                     duration precip → daily rollup → join)
 
 Each function takes an already-normalized snapshot DataFrame (see
-sources/reader.read_snapshots) so the same plan runs over batch files, temp
-views, or a streaming source. Request-level concerns (file pruning, station
-CSV parsing, unit conversion) compose around them.
+sources/reader.read_snapshots) so the same plan runs over batch files or
+temp views. Request-level concerns (file pruning, station CSV parsing,
+unit conversion) compose around them.
 
 Plan-shape notes for 100 TB:
   - All filters are plain Column predicates on storage columns → Catalyst
@@ -18,11 +18,15 @@ Plan-shape notes for 100 TB:
     ranges both reach PushedFilters).
   - Conditional aggregation (`agg FILTER`) is one pass — partial aggregation
     map-side, final after one shuffle on the group keys.
-  - The forecast query's per-field duration detection reuses one shuffle on
-    (station_id, date): the window, the HAVING aggregate, the fallback-min
-    and the daily sums all hash-partition on the same prefix.
-  - The correlated scalar subquery fallback (weather_data.rs:314-343) is
-    decorrelated into a groupBy-min join — deterministic, no nested-loop.
+  - The forecast query's window/aggregate chain (latest-wins dedup, the
+    per-field native-duration pick with its correlated MIN fallback, the
+    daily aggregates and their joins) is one pandas kernel,
+    `forecast_rollup`, whose every group key holds station_id. The route
+    runs it as a grouped map after ONE exchange on a hash bucket of
+    station_id, so a bucket holds whole stations and one pandas call
+    rolls up many of them: two Spark jobs per request instead of one
+    operator tree (and ~25 jobs) per window and join. The scoring update
+    runs the same kernel on the driver over its event's stations.
 
 Request-invariant Column expressions (the aggregate lists, the precip
 classifier, the per-unit conversions) are built once per process by
@@ -39,8 +43,10 @@ import functools
 from collections.abc import Sequence
 from datetime import datetime, timedelta, timezone
 
+import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from noaa_oracle_spark.functions.weather import (
     classify_precip,
@@ -49,7 +55,6 @@ from noaa_oracle_spark.functions.weather import (
     temp_to_unit,
     ts,
 )
-from noaa_oracle_spark.operators.dedup import distinct_on
 
 
 def _rfc3339(dt: datetime) -> str:
@@ -236,129 +241,7 @@ def default_generated_window(
     return now - timedelta(days=1), now
 
 
-def _best_duration(
-    rows: DataFrame, field: str
-) -> DataFrame:
-    """Native-interval detection for one precip field
-    (weather_data.rs:256-305): chain statistics per (station, date,
-    duration) via LEAD, HAVING count>1, then argmax by chain ratio with
-    shortest-duration tiebreak."""
-    from pyspark.sql.window import Window
-
-    f = rows.filter(F.col(field).isNotNull())
-    w = Window.partitionBy("station_id", "date", "duration_secs").orderBy(
-        "begin_ts"
-    )
-    chained = f.withColumn("next_begin", F.lead("begin_ts").over(w))
-    stats = (
-        chained.groupBy("station_id", "date", "duration_secs")
-        .agg(
-            F.count(F.lit(1)).alias("row_count"),
-            F.sum(
-                F.when(
-                    F.col("next_begin").isNotNull()
-                    & (F.col("end_ts") == F.col("next_begin")),
-                    1,
-                ).otherwise(0)
-            ).alias("chain_count"),
-        )
-        .filter(F.col("row_count") > 1)
-    )
-    return distinct_on(
-        stats.withColumn(
-            "chain_ratio",
-            F.col("chain_count").cast("float") / F.col("row_count"),
-        ),
-        keys=["station_id", "date"],
-        order_by=[
-            F.desc("chain_ratio"),
-            F.asc("duration_secs"),
-        ],
-    ).select("station_id", "date", "duration_secs")
-
-
-def _daily_field(rows: DataFrame, field: str) -> DataFrame:
-    """SUM a precip field at its native duration with fallback to the
-    shortest available duration (weather_data.rs:309-345). The correlated
-    scalar subquery `(SELECT MIN(duration) ... WHERE same station/date)` is
-    decorrelated into a groupBy-min join — same result, no nested loop."""
-    f = rows.filter(F.col(field).isNotNull())
-    best = _best_duration(rows, field).withColumnRenamed(
-        "duration_secs", "best_duration"
-    )
-    fallback = f.groupBy("station_id", "date").agg(
-        F.min("duration_secs").alias("fallback_duration")
-    )
-    picked = (
-        f.join(best, ["station_id", "date"], "left")
-        .join(fallback, ["station_id", "date"], "left")
-        .filter(
-            F.col("duration_secs")
-            == F.coalesce(F.col("best_duration"), F.col("fallback_duration"))
-        )
-    )
-    return picked.groupBy("station_id", "date").agg(*_precip_aggs()[field])
-
-
-@functools.cache
-def _precip_aggs() -> dict[str, tuple[Column, ...]]:
-    """Per precip field, its daily aggregates at the picked duration
-    (weather_data.rs:309-345)."""
-    qpf = F.col("liquid_precipitation_amt")
-    sa, sr = F.col("snow_amt"), F.col("snow_ratio")
-    ia = F.col("ice_amt")
-    return {
-        "liquid_precipitation_amt": (
-            F.sum(F.when(qpf.isNotNull() & (qpf >= 0), qpf)).alias("total_qpf"),
-        ),
-        "snow_amt": (
-            F.sum(F.when(sa.isNotNull() & (sa >= 0), sa)).alias("snow_amt"),
-            F.avg(F.when(sr.isNotNull() & (sr > 0), sr)).alias("avg_snow_ratio"),
-        ),
-        "ice_amt": (
-            F.sum(F.when(ia.isNotNull() & (ia >= 0), ia)).alias("ice_amt"),
-        ),
-    }
-
-
-@functools.cache
-def _forecast_daily_aggs() -> tuple[Column, ...]:
-    """The per-(station, day) forecast aggregates with the reference's
-    range guards (weather_data.rs:365-373)."""
-    mt, xt = F.col("min_temp"), F.col("max_temp")
-    w, d = F.col("wind_speed"), F.col("wind_direction")
-    hx, hn = F.col("relative_humidity_max"), F.col("relative_humidity_min")
-    pc = F.col("twelve_hour_probability_of_precipitation")
-    return (
-        F.min("begin_time").alias("start_time"),
-        F.max("end_time").alias("end_time"),
-        F.min(F.when(in_range(mt, -200, 200), mt)).alias("temp_low"),
-        F.max(F.when(in_range(xt, -200, 200), xt)).alias("temp_high"),
-        F.max(F.when(in_range(w, 0, 500), w)).alias("wind_speed"),
-        F.max(F.when(in_range(d, 0, 360), d)).alias("wind_direction"),
-        F.max(F.when(in_range(hx, 0, 100), hx)).alias("humidity_max"),
-        F.min(F.when(in_range(hn, 0, 100), hn)).alias("humidity_min"),
-        F.max("temperature_unit_code").alias("temperature_unit_code"),
-        F.max(F.when(pc.isNotNull(), pc)).alias("precip_chance"),
-    )
-
-
-@functools.cache
-def _forecast_rain() -> Column:
-    """Rain derived from QPF less snow water and ice
-    (weather_data.rs:377-401)."""
-    return F.greatest(
-        F.lit(0.0),
-        F.coalesce(
-            F.col("total_qpf")
-            - (F.col("dp_snow_amt") / F.nullif(F.col("avg_snow_ratio"), F.lit(0.0)))
-            - F.coalesce(F.col("dp_ice_amt"), F.lit(0.0)),
-            F.col("total_qpf") - F.coalesce(F.col("dp_ice_amt"), F.lit(0.0)),
-        ),
-    )
-
-
-def forecasts_data(
+def forecast_rows(
     forecasts: DataFrame,
     station_ids: Sequence[str] | None = None,
     start: datetime | None = None,
@@ -366,14 +249,15 @@ def forecasts_data(
     generated_start: datetime | None = None,
     generated_end: datetime | None = None,
     now: datetime | None = None,
-    temperature_unit: str | None = None,
 ) -> DataFrame:
-    """Daily per-station forecast rollup with latest-wins dedup and per-field
-    native-duration precipitation (weather_data.rs:90-424)."""
+    """The input of `forecast_rollup`: the forecast rows of the request's
+    stations and windows (weather_data.rs:213-235), their UTC instants as
+    epoch microseconds, the UTC day bucket and the window's duration
+    (:237-250). The probability of precipitation is a DOUBLE, as the typed
+    header casts it (:200)."""
     generated_start, generated_end = default_generated_window(
         start, generated_start, generated_end, now
     )
-
     df = forecasts
     if station_ids:
         df = df.filter(F.col("station_id").isin(list(station_ids)))
@@ -389,96 +273,217 @@ def forecasts_data(
         df = df.filter(
             ts("generated_at") <= F.lit(_rfc3339(generated_end)).cast("timestamp")
         )
-
-    # The typed header casts twelve_hour_probability_of_precipitation to
-    # DOUBLE (weather_data.rs:200); mirror that.
-    df = df.withColumn(
-        "twelve_hour_probability_of_precipitation",
-        F.col("twelve_hour_probability_of_precipitation").cast("double"),
-    )
-
-    # Latest-wins dedup per (station, window) normalized to UTC instants
-    # (weather_data.rs:213-235). generated_at DESC picks the freshest
-    # forecast; RFC3339-string tiebreak makes the pick total and stable.
-    deduped = distinct_on(
-        df.withColumn("begin_ts", ts("begin_time")).withColumn(
-            "end_ts", ts("end_time")
+    begin_ts, end_ts = ts("begin_time"), ts("end_time")
+    return df.select(
+        "station_id",
+        _day_text(begin_ts).alias("date"),
+        "begin_time",
+        "end_time",
+        F.unix_micros(begin_ts).alias("begin_us"),
+        F.unix_micros(end_ts).alias("end_us"),
+        (F.unix_timestamp(end_ts) - F.unix_timestamp(begin_ts)).alias(
+            "duration_secs"
         ),
-        keys=["station_id", "begin_ts", "end_ts"],
-        order_by=[F.desc(ts("generated_at")), F.desc("generated_at")],
+        "generated_at",
+        F.unix_micros(ts("generated_at")).alias("generated_us"),
+        "min_temp",
+        "max_temp",
+        "wind_speed",
+        "wind_direction",
+        "relative_humidity_max",
+        "relative_humidity_min",
+        "temperature_unit_code",
+        F.col("twelve_hour_probability_of_precipitation")
+        .cast("double")
+        .alias("precip_chance"),
+        "liquid_precipitation_amt",
+        "snow_amt",
+        "snow_ratio",
+        "ice_amt",
     )
 
-    precip_rows = (
-        deduped.filter(
-            F.col("liquid_precipitation_amt").isNotNull()
-            | F.col("snow_amt").isNotNull()
-            | F.col("ice_amt").isNotNull()
-        )
-        .select(
-            "station_id",
-            _day_text(F.col("begin_ts")).alias("date"),
-            "begin_ts",
-            "end_ts",
-            (
-                F.unix_timestamp("end_ts") - F.unix_timestamp("begin_ts")
-            ).alias("duration_secs"),
-            "liquid_precipitation_amt",
-            "snow_amt",
-            "snow_ratio",
-            "ice_amt",
-        )
+
+_DAY = ["station_id", "date"]
+
+#: The per-(station, day) aggregates: (output, input, reduction, the
+#: reference's range guard) (weather_data.rs:360-373).
+_DAILY_AGGS = (
+    ("start_time", "begin_time", "min", None),
+    ("end_time", "end_time", "max", None),
+    ("temp_low", "min_temp", "min", (-200, 200)),
+    ("temp_high", "max_temp", "max", (-200, 200)),
+    ("wind_speed", "wind_speed", "max", (0, 500)),
+    ("wind_direction", "wind_direction", "max", (0, 360)),
+    ("humidity_max", "relative_humidity_max", "max", (0, 100)),
+    ("humidity_min", "relative_humidity_min", "min", (0, 100)),
+    ("temperature_unit_code", "temperature_unit_code", "max", None),
+    ("precip_chance", "precip_chance", "max", None),
+)
+_INT_COLUMNS = ("temp_low", "temp_high", "wind_speed", "wind_direction",
+                "humidity_max", "humidity_min")
+FORECAST_COLUMNS = (
+    "station_id", "date", "start_time", "end_time", "temp_low", "temp_high",
+    "wind_speed", "wind_direction", "humidity_max", "humidity_min",
+    "temperature_unit_code", "precip_chance", "rain_amt", "snow_amt",
+    "ice_amt",
+)
+
+
+def _daily_aggs(rows: pd.DataFrame) -> pd.DataFrame:
+    cols = {}
+    for out, col, _, guard in _DAILY_AGGS:
+        v = rows[col]
+        if guard is not None:
+            v = v.where(v.between(*guard))
+        elif v.dtype == object:
+            v = v.astype("string")  # min/max that skip NULL text
+        cols[out] = v
+    return (
+        pd.DataFrame(cols)
+        .assign(station_id=rows["station_id"], date=rows["date"])
+        .groupby(_DAY, dropna=False)
+        .agg({out: how for out, _, how, _ in _DAILY_AGGS})
     )
 
-    daily_qpf = _daily_field(precip_rows, "liquid_precipitation_amt")
-    daily_snow = _daily_field(precip_rows, "snow_amt")
-    daily_ice = _daily_field(precip_rows, "ice_amt")
 
-    # FULL OUTER join chain with key coalescing (weather_data.rs:347-358).
-    # Spark's USING-column full outer join coalesces the keys for us.
-    daily_precip = daily_qpf.join(
-        daily_snow, ["station_id", "date"], "full_outer"
-    ).join(daily_ice, ["station_id", "date"], "full_outer")
-
-    daily_forecasts = (
-        deduped.withColumn("date", _day_text(F.col("begin_ts")))
-        .groupBy("station_id", "date")
-        .agg(*_forecast_daily_aggs())
+def _native_duration_rows(precip: pd.DataFrame, field: str) -> pd.DataFrame:
+    """The rows of one precip field at its native duration per (station,
+    day): among durations with more than one row, the one whose windows
+    chain end-to-begin for the largest share of its rows, ties to the
+    shorter; else the shortest duration with a value
+    (weather_data.rs:256-345)."""
+    by_duration = [*_DAY, "duration_secs"]
+    f = precip[precip[field].notna()].sort_values(
+        [*by_duration, "begin_us"], na_position="first"
     )
+    next_begin = f.groupby(by_duration, dropna=False)["begin_us"].shift(-1)
+    stats = (
+        (f["end_us"] == next_begin)
+        .groupby([f[k] for k in by_duration], dropna=False)
+        .agg(["size", "sum"])
+    )
+    stats = stats[stats["size"] > 1]
+    best = (
+        (stats["sum"] / stats["size"])
+        .rename("ratio")
+        .reset_index()
+        .sort_values([*_DAY, "ratio", "duration_secs"],
+                     ascending=[True, True, False, True], na_position="first")
+        .drop_duplicates(_DAY)
+        .set_index(_DAY)["duration_secs"]
+    )
+    fallback = f.groupby(_DAY, dropna=False)["duration_secs"].min()
+    picked = best.combine_first(fallback).rename("picked")
+    f = f.join(picked, on=_DAY)
+    return f[f["duration_secs"] == f["picked"]]
 
-    # Final projection + window clamp + rain derivation
-    # (weather_data.rs:377-401). daily_forecasts is already unique per
-    # (station, date) so the reference's outer GROUP BY is an identity
-    # re-aggregation — expressed here as plain column math after the join.
-    start_col = F.col("start_time")
+
+def _day_sum(rows: pd.DataFrame, col: str) -> pd.Series:
+    """SUM(col) FILTER (WHERE col >= 0) per (station, day)."""
+    v = rows[col]
+    return v.where(v >= 0).groupby(
+        [rows[k] for k in _DAY], dropna=False).sum(min_count=1)
+
+
+def _daily_precip(rows: pd.DataFrame) -> pd.DataFrame:
+    """Each precip field summed per (station, day) at its native duration,
+    outer-joined on (station, day) (weather_data.rs:309-358). A row with no
+    day matches no day in the reference's joins, so it has no precip."""
+    precip = rows[
+        rows[["liquid_precipitation_amt", "snow_amt", "ice_amt"]]
+        .notna().any(axis=1) & rows["date"].notna()
+    ]
+    qpf, snow, ice = (
+        _native_duration_rows(precip, f)
+        for f in ("liquid_precipitation_amt", "snow_amt", "ice_amt")
+    )
+    ratio = snow["snow_ratio"]
+    return pd.concat(
+        {
+            "total_qpf": _day_sum(qpf, "liquid_precipitation_amt"),
+            "snow_amt": _day_sum(snow, "snow_amt"),
+            "avg_snow_ratio": ratio.where(ratio > 0).groupby(
+                [snow[k] for k in _DAY], dropna=False).mean(),
+            "ice_amt": _day_sum(ice, "ice_amt"),
+        },
+        axis=1,
+    ).astype("float64")
+
+
+def forecast_rollup(
+    rows: pd.DataFrame,
+    start: datetime | None = None,
+    end: datetime | None = None,
+) -> pd.DataFrame:
+    """The daily per-station forecast rollup (weather_data.rs:213-401) over
+    `forecast_rows` output, for any number of stations at once: every group
+    key holds station_id. Latest-wins dedup, the native-duration precip
+    pick, the guarded daily aggregates, rain derivation and the clamp of
+    each day to [start, end]. Rows come out in `FORECAST_COLUMNS`."""
+    # latest-wins per (station, window) as UTC instants (:213-235): the
+    # freshest generated_at, then its RFC3339 text, makes the pick total
+    rows = rows.sort_values(
+        ["generated_us", "generated_at"], ascending=False, na_position="last"
+    ).drop_duplicates(["station_id", "begin_us", "end_us"])
+    out = _daily_aggs(rows).join(_daily_precip(rows))
+    # rain is QPF less snow water and ice, floored at 0 (:377-401); the
+    # average of positive snow ratios is never 0, so NULLIF(.., 0) is moot
+    qpf, ice = out["total_qpf"], out["ice_amt"].fillna(0.0)
+    rain = (qpf - out["snow_amt"] / out["avg_snow_ratio"] - ice).fillna(
+        qpf - ice
+    )
+    out["rain_amt"] = rain.clip(lower=0.0).fillna(0.0)
     if start is not None:
-        start_col = F.greatest(F.lit(_rfc3339(start)), start_col)
-    end_col = F.col("end_time")
+        s = _rfc3339(start)
+        out["start_time"] = out["start_time"].where(
+            (out["start_time"] > s).fillna(False), s)
     if end is not None:
-        end_col = F.least(F.lit(_rfc3339(end)), end_col)
+        e = _rfc3339(end)
+        out["end_time"] = out["end_time"].where(
+            (out["end_time"] < e).fillna(False), e)
+    out = out.reset_index()
+    for c in _INT_COLUMNS:
+        out[c] = out[c].astype("Int64")
+    return out[list(FORECAST_COLUMNS)]
 
-    out = (
-        daily_forecasts.join(
-            daily_precip.withColumnRenamed("snow_amt", "dp_snow_amt")
-            .withColumnRenamed("ice_amt", "dp_ice_amt"),
-            ["station_id", "date"],
-            "left",
-        )
-        .select(
-            "station_id",
-            "date",
-            start_col.alias("start_time"),
-            end_col.alias("end_time"),
-            "temp_low",
-            "temp_high",
-            "wind_speed",
-            "wind_direction",
-            "humidity_max",
-            "humidity_min",
-            "temperature_unit_code",
-            "precip_chance",
-            _forecast_rain().alias("rain_amt"),
-            F.col("dp_snow_amt").alias("snow_amt"),
-            F.col("dp_ice_amt").alias("ice_amt"),
-        )
+
+def _rollup_schema(start: datetime | None, end: datetime | None) -> T.StructType:
+    """`forecast_rollup`'s Spark types. A clamped window end is never NULL,
+    nor is rain_amt (GREATEST with 0)."""
+    not_null = {"rain_amt"}
+    if start is not None:
+        not_null.add("start_time")
+    if end is not None:
+        not_null.add("end_time")
+    types = {c: T.LongType() for c in _INT_COLUMNS}
+    types.update({c: T.DoubleType() for c in
+                  ("precip_chance", "rain_amt", "snow_amt", "ice_amt")})
+    return T.StructType([
+        T.StructField(c, types.get(c, T.StringType()), c not in not_null)
+        for c in FORECAST_COLUMNS
+    ])
+
+
+def forecasts_data(
+    forecasts: DataFrame,
+    station_ids: Sequence[str] | None = None,
+    start: datetime | None = None,
+    end: datetime | None = None,
+    generated_start: datetime | None = None,
+    generated_end: datetime | None = None,
+    now: datetime | None = None,
+    temperature_unit: str | None = None,
+) -> DataFrame:
+    """Daily per-station forecast rollup with latest-wins dedup and per-field
+    native-duration precipitation (weather_data.rs:90-424). The rows are
+    filtered and cast in Spark; one exchange on a hash of station_id then
+    runs `forecast_rollup` once per bucket of stations."""
+    rows = forecast_rows(
+        forecasts, station_ids, start, end, generated_start, generated_end, now
+    )
+    buckets = rows.sparkSession.sparkContext.defaultParallelism
+    out = rows.groupBy(F.abs(F.hash("station_id")) % buckets).applyInPandas(
+        lambda pdf: forecast_rollup(pdf, start, end),
+        _rollup_schema(start, end),
     )
     return _convert_temps(out, temperature_unit)

@@ -1,4 +1,4 @@
-"""Contest scoring kernel as a pure DataFrame pipeline.
+"""Contest scoring kernel: entries graded in plain Python on the driver.
 
 Parity target: crates/oracle/src/oracle.rs:484-761 (update_entry_scores).
 Per entry × station × enabled field, the player's Over/Par/Under choice is
@@ -17,154 +17,118 @@ Tiebreak total (oracle.rs:738-761): total = max(10000, base·10000) −
 (uuidv7_millis mod 10000) — earlier entries (smaller ms) rank higher on
 equal base scores.
 
-Shape: choices ⋈ forecast ⋈ observed are per-station equi-joins; the station
-dimension is tiny (≤ locations per event) so both weather sides broadcast;
-the only shuffle is the final groupBy(entry_id) — and with ≤ 25 entries per
-event even that is a single partition after AQE. The same plan scales to
-scoring millions of entries across thousands of events unchanged (join keys
-become (event_id, station)).
+Shape: an event holds at most 25 entries over its few stations, so the
+grading is a loop over the choices against two per-station dicts, as the
+reference's is; the weather behind those dicts is the only Spark work.
 """
 
 from __future__ import annotations
 
-from collections.abc import Sequence
+from collections.abc import Mapping, Sequence
+from decimal import ROUND_HALF_UP, Decimal
 
-from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F
+import pandas as pd
 
 OVER_OR_UNDER_POINTS = 10
 PAR_POINTS = 20
 DEFAULT_SCORING_FIELDS = ("temp_high", "temp_low", "wind_speed")
 
-# (choice column, forecast expr name, observed expr name) per scoring field
-# — the frame column layout produced by _grade below.
 
-
-def uuidv7_millis(id_col: Column) -> Column:
+def uuidv7_millis(entry_id: str) -> int:
     """UUIDv7 creation time in ms: the first 48 bits of the UUID — hex chars
     1-12 with dashes removed (oracle.rs:738-750 reads the uuid timestamp)."""
-    return F.conv(
-        F.substring(F.regexp_replace(id_col, "-", ""), 1, 12), 16, 10
-    ).cast("long")
+    return int(entry_id.replace("-", "")[:12], 16)
 
 
-def _grade(choice: Column, over: Column, par: Column, under: Column) -> Column:
-    """Points for one field: choice ∈ {'over','par','under'} or NULL."""
-    return (
-        F.when(choice.isNull(), 0)
-        .when((choice == "over") & over, OVER_OR_UNDER_POINTS)
-        .when((choice == "par") & par, PAR_POINTS)
-        .when((choice == "under") & under, OVER_OR_UNDER_POINTS)
-        .otherwise(0)
-    )
+def _round_half_up(v: float) -> int:
+    """f64::round as i64: halves away from zero."""
+    return int(Decimal(repr(v)).to_integral_value(ROUND_HALF_UP))
+
+
+#: field → (forecast field, Par tolerance) for the fields graded as
+#: amounts with NULL→0 (oracle.rs:656-736)
+_TOLERANCE_FIELDS = {
+    "rain_amt": ("rain_amt", 0.1),
+    "snow_amt": ("snow_amt", 0.5),
+    "humidity": ("humidity_max", 5),
+}
+
+
+def _or(v, default):
+    return default if v is None else v
+
+
+def _field_outcomes(field: str, fc: Mapping, ob: Mapping):
+    """(over, par, under) for one field of one station, or None when the
+    field cannot be graded (a NULL temperature on either side)."""
+    if field in ("temp_high", "temp_low"):
+        f, o = fc.get(field), ob.get(field)
+        if f is None or o is None:
+            return None
+        o = _round_half_up(o)
+        return f < o, f == o, f > o
+    if field == "wind_speed":
+        f, o = _or(fc.get(field), 0), _or(ob.get(field), 0)
+        return f < o, f == o, f > o
+    if field == "wind_direction":
+        f, o = _or(fc.get(field), 0), _or(ob.get(field), 0)
+        raw = abs(f - o) % 360
+        return o > f, min(raw, 360 - raw) <= 22, o < f
+    f_field, tolerance = _TOLERANCE_FIELDS[field]
+    f, o = _or(fc.get(f_field), 0), _or(ob.get(field), 0)
+    return o > f, abs(o - f) <= tolerance, o < f
+
+
+def _points(choice: str | None, outcomes) -> int:
+    if choice is None or outcomes is None:
+        return 0
+    over, par, under = outcomes
+    if choice == "over" and over:
+        return OVER_OR_UNDER_POINTS
+    if choice == "par" and par:
+        return PAR_POINTS
+    if choice == "under" and under:
+        return OVER_OR_UNDER_POINTS
+    return 0
 
 
 def score_entries(
-    entries: DataFrame,
-    choices: DataFrame,
-    forecasts: DataFrame,
-    observations: DataFrame,
+    entry_ids: Sequence[str],
+    choices: Sequence[Mapping],
+    forecasts: Mapping[str, Mapping],
+    observations: Mapping[str, Mapping],
     scoring_fields: Sequence[str] = DEFAULT_SCORING_FIELDS,
-) -> DataFrame:
-    """Compute (entry_id, base_score, total_score).
+) -> pd.DataFrame:
+    """Compute (entry_id, base_score, total_score), one row per entry.
 
-    entries:      entry_id (UUIDv7 string)
-    choices:      entry_id, station, temp_low, temp_high, wind_speed,
-                  wind_direction, rain_amt, snow_amt, humidity
-                  (each choice ∈ {'over','par','under'} or NULL)
-    forecasts:    station_id, temp_low/temp_high (long), wind_speed?,
-                  wind_direction?, rain_amt?, snow_amt?, humidity_max?
-    observations: station_id, temp_low/temp_high (double), wind_speed
-                  (long, already NULL→0 per weather_data.rs:1127-1131),
-                  wind_direction?, rain_amt?, snow_amt?, humidity?
+    entry_ids:    UUIDv7 strings
+    choices:      {entry_id, station, temp_low, temp_high, wind_speed,
+                  wind_direction, rain_amt, snow_amt, humidity}
+                  (each choice ∈ {'over','par','under'} or None)
+    forecasts:    station → {temp_low, temp_high, wind_speed,
+                  wind_direction, rain_amt, snow_amt, humidity_max}
+    observations: station → {temp_low, temp_high, wind_speed,
+                  wind_direction, rain_amt, snow_amt, humidity}
+    A missing key or a None is a NULL.
     """
-    f = forecasts.select(
-        F.col("station_id").alias("station"),
-        F.col("temp_low").alias("f_temp_low"),
-        F.col("temp_high").alias("f_temp_high"),
-        F.col("wind_speed").alias("f_wind"),
-        F.col("wind_direction").alias("f_dir"),
-        F.col("rain_amt").alias("f_rain"),
-        F.col("snow_amt").alias("f_snow"),
-        F.col("humidity_max").alias("f_hum"),
-    )
-    o = observations.select(
-        F.col("station_id").alias("station"),
-        F.round(F.col("temp_low"), 0).cast("long").alias("o_temp_low"),
-        F.round(F.col("temp_high"), 0).cast("long").alias("o_temp_high"),
-        F.coalesce(F.col("wind_speed"), F.lit(0)).alias("o_wind"),
-        F.col("wind_direction").alias("o_dir"),
-        F.col("rain_amt").alias("o_rain"),
-        F.col("snow_amt").alias("o_snow"),
-        F.col("humidity").alias("o_hum"),
-    )
-    # choices drive the grading; stations without forecast AND observation
-    # contribute nothing (the reference `continue`s when either is missing,
-    # oracle.rs:519-531) → inner joins.
-    g = choices.join(F.broadcast(f), "station").join(F.broadcast(o), "station")
-
-    points = F.lit(0)
-    if "temp_high" in scoring_fields:
-        points = points + _grade(
-            F.col("temp_high"),
-            F.col("f_temp_high") < F.col("o_temp_high"),
-            F.col("f_temp_high") == F.col("o_temp_high"),
-            F.col("f_temp_high") > F.col("o_temp_high"),
+    base = dict.fromkeys(entry_ids, 0)
+    for c in choices:
+        fc, ob = forecasts.get(c["station"]), observations.get(c["station"])
+        # a station missing its forecast or its observation grades nothing
+        # (the reference `continue`s when either is missing, :519-531)
+        if c["entry_id"] not in base or fc is None or ob is None:
+            continue
+        base[c["entry_id"]] += sum(
+            _points(c.get(field), _field_outcomes(field, fc, ob))
+            for field in scoring_fields
         )
-    if "temp_low" in scoring_fields:
-        points = points + _grade(
-            F.col("temp_low"),
-            F.col("f_temp_low") < F.col("o_temp_low"),
-            F.col("f_temp_low") == F.col("o_temp_low"),
-            F.col("f_temp_low") > F.col("o_temp_low"),
-        )
-    if "wind_speed" in scoring_fields:
-        fw = F.coalesce(F.col("f_wind"), F.lit(0))  # implicit calm forecast
-        points = points + _grade(
-            F.col("wind_speed"),
-            fw < F.col("o_wind"),
-            fw == F.col("o_wind"),
-            fw > F.col("o_wind"),
-        )
-    if "wind_direction" in scoring_fields:
-        fd = F.coalesce(F.col("f_dir"), F.lit(0))
-        od = F.coalesce(F.col("o_dir"), F.lit(0))
-        raw = F.abs(fd - od) % 360
-        circ = F.least(raw, F.lit(360) - raw)
-        points = points + _grade(
-            F.col("wind_direction"), od > fd, circ <= 22, od < fd
-        )
-    if "rain_amt" in scoring_fields:
-        fr = F.coalesce(F.col("f_rain"), F.lit(0.0))
-        orn = F.coalesce(F.col("o_rain"), F.lit(0.0))
-        points = points + _grade(
-            F.col("rain_amt"), orn > fr, F.abs(orn - fr) <= 0.1, orn < fr
-        )
-    if "snow_amt" in scoring_fields:
-        fs = F.coalesce(F.col("f_snow"), F.lit(0.0))
-        osn = F.coalesce(F.col("o_snow"), F.lit(0.0))
-        points = points + _grade(
-            F.col("snow_amt"), osn > fs, F.abs(osn - fs) <= 0.5, osn < fs
-        )
-    if "humidity" in scoring_fields:
-        fh = F.coalesce(F.col("f_hum"), F.lit(0))
-        oh = F.coalesce(F.col("o_hum"), F.lit(0))
-        points = points + _grade(
-            F.col("humidity"), oh > fh, F.abs(oh - fh) <= 5, oh < fh
-        )
-
-    per_entry = g.select(F.col("entry_id"), points.alias("points")).groupBy(
-        "entry_id"
-    ).agg(F.sum("points").alias("base_score"))
-
-    # LEFT join back: entries with no gradeable choices still get scored
-    # (base 0) — the reference always pushes a score row per entry.
-    scored = entries.select("entry_id").join(per_entry, "entry_id", "left")
-    base = F.coalesce(F.col("base_score"), F.lit(0)).cast("long")
-    total = (
-        F.greatest(F.lit(10000), base * 10000)
-        - (uuidv7_millis(F.col("entry_id")) % 10000)
-    ).alias("total_score")
-    return scored.select(
-        "entry_id", base.alias("base_score"), total
+    return pd.DataFrame(
+        {
+            "entry_id": list(base),
+            "base_score": list(base.values()),
+            "total_score": [
+                max(10000, b * 10000) - uuidv7_millis(e) % 10000
+                for e, b in base.items()
+            ],
+        }
     )

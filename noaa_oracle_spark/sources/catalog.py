@@ -95,12 +95,15 @@ class SnapshotCatalog:
     file_access.rs:263-329). Windowed selection issues one prefix listing
     per date in the widened window — listing cost is O(days), never a
     full-base scan; a nonexistent date prefix lists empty, exactly like a
-    prefix with no objects."""
+    prefix with no objects.
+
+    A `file://` data dir is kept as the plain path LocalFS lists its keys
+    under, so every key starts with the prefix it was listed by."""
 
     def __init__(self, data_dir: str, fs=None):
-        from noaa_oracle_spark.sources.fs import fs_for
+        from noaa_oracle_spark.sources.fs import fs_for, strip_file_scheme
 
-        self.data_dir = data_dir
+        self.data_dir = strip_file_scheme(data_dir)
         self.fs = fs if fs is not None else fs_for(data_dir)
 
     def _date_prefix(self, d: date) -> str:

@@ -60,7 +60,7 @@ def test_concurrent_entry_adds_serialize(spark, tmp_path):
     entries = store.event_entries(eid).collect()
     assert len(entries) == 10
     assert len({r["id"] for r in entries}) == 10
-    choices = store.entry_choices(eid).collect()
+    _ids, choices = store.entries_and_choices(eid)
     assert len(choices) == 10
 
 
@@ -135,7 +135,7 @@ def test_readers_beside_the_writer_never_fail(spark, tmp_path):
                 store.event_entries(eid).collect()
                 # one snapshot per read: every batch adds one choice per
                 # entry, so a torn pair of tables would show here
-                choices = store.entry_choices(eid).collect()
+                _ids, choices = store.entries_and_choices(eid)
                 assert len(choices) % 2 == 0, len(choices)
                 reads[i] += 1
                 if last:
@@ -173,7 +173,7 @@ def test_readers_beside_the_writer_never_fail(spark, tmp_path):
     entries = store.event_entries(eid).collect()
     assert sorted(r["id"] for r in entries) == sorted(ids)
     assert {(r["score"], r["base_score"]) for r in entries} == {(10, 1)}
-    assert len(store.entry_choices(eid).collect()) == 6
+    assert len(store.entries_and_choices(eid)[1]) == 6
 
 
 def test_mutations_launch_no_spark_job(spark, tmp_path):

@@ -19,9 +19,8 @@ from tests.test_scoring_golden import (
     E3,
     E4,
     EXPECTED,
-    FORECASTS,
-    OBSERVATIONS,
     uuid_v7_at,
+    weather_values,
 )
 
 UTC = timezone.utc
@@ -62,24 +61,10 @@ def store(spark, tmp_path):
     return s
 
 
-def _weather(spark):
-    forecasts = spark.createDataFrame(
-        [(s, tl, th, w, None, None, None, None) for s, tl, th, w in FORECASTS],
-        "station_id string, temp_low long, temp_high long, wind_speed long, "
-        "wind_direction long, rain_amt double, snow_amt double, humidity_max long",
-    )
-    observations = spark.createDataFrame(
-        [(s, tl, th, w, None, None, None, None) for s, tl, th, w in OBSERVATIONS],
-        "station_id string, temp_low double, temp_high double, wind_speed long, "
-        "wind_direction long, rain_amt double, snow_amt double, humidity long",
-    )
-    return forecasts, observations
-
-
 def test_full_lifecycle_golden(spark, store):
     # clock inside the observation window → event is Running, gets scored
     now = datetime(2024, 8, 12, 12, tzinfo=UTC)
-    fc, ob = _weather(spark)
+    fc, ob = weather_values()
     results = run_scoring_cycle(store, fc, ob, now)
     assert EVENT_ID in results
     got = {e: (t, b) for e, t, b in results[EVENT_ID]["scores"]}

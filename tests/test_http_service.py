@@ -262,12 +262,12 @@ def oracle_server(spark, tmp_path_factory):
     WeatherAccess seam — the same fixtures the reference's e2e ETL test
     uses (etl_workflow.rs:62-392), so scored entries are exactly the
     golden scores."""
-    from tests.test_eventstore_etl import _weather
+    from tests.test_scoring_golden import weather_values
 
     d = str(tmp_path_factory.mktemp("http_oracle"))
 
     def provider(spark_, data_dir_, ev, now=None):
-        return _weather(spark)
+        return weather_values()
 
     srv, _ = serve_background(spark, d, weather_provider=provider)
     yield f"http://127.0.0.1:{srv.server_address[1]}"

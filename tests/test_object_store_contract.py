@@ -206,3 +206,32 @@ def test_file_url_remote_host_rejected():
     assert strip_file_scheme("file://localhost/p") == "/p"
     assert strip_file_scheme("file:///p") == "/p"
     assert strip_file_scheme("/plain/path") == "/plain/path"
+
+
+def test_file_url_store_lists_and_reads_like_its_plain_path(spark, tmp_path):
+    """A one-file store named by a `file:///…` URL: a window holding the
+    file lists it, `all_paths` returns its path unmangled, and a read over
+    the URL answers what a read over the plain path does."""
+    from datetime import timedelta
+
+    from noaa_oracle_spark import service
+    from tests.weather_fixtures import D0, OBS_NEW_FIELDS, _obs_row, _write
+
+    at = D0 + timedelta(hours=6)
+    path = snapshot_path(str(tmp_path), "observations", at)
+    _write(path, [_obs_row("KATL", 6), _obs_row("KBOS", 6, wind_speed=20)],
+           OBS_NEW_FIELDS)
+    url = f"file://{tmp_path}"
+    assert url.startswith("file:///")
+    start, end = at - timedelta(hours=1), at + timedelta(hours=1)
+    cat = SnapshotCatalog(url)
+    assert cat.list_paths("observations", start, end) == [path]
+    assert cat.all_paths("observations") == [path]
+
+    def rows(data_dir):
+        return sorted(tuple(r) for r in service.observations_request(
+            spark, data_dir, ["KATL", "KBOS"], start, end).collect())
+
+    plain = rows(str(tmp_path))
+    assert len(plain) == 2
+    assert rows(url) == plain

@@ -101,35 +101,6 @@ def test_dim_join_broadcasts(spark):
     assert "BroadcastHashJoin" in plan
 
 
-def test_scoring_kernel_broadcasts(spark):
-    from noaa_oracle_spark.scoring import score_entries
-    from tests.test_scoring_golden import CHOICES, E1, E2, E3, E4, FORECASTS, OBSERVATIONS
-
-    entries = spark.createDataFrame([(e,) for e in (E1, E2, E3, E4)], ["entry_id"])
-    choices = spark.createDataFrame(
-        CHOICES,
-        "entry_id string, station string, temp_low string, temp_high string, "
-        "wind_speed string, wind_direction string, rain_amt string, "
-        "snow_amt string, humidity string",
-    )
-    forecasts = spark.createDataFrame(
-        [(s, tl, th, w, None, None, None, None) for s, tl, th, w in FORECASTS],
-        "station_id string, temp_low long, temp_high long, wind_speed long, "
-        "wind_direction long, rain_amt double, snow_amt double, humidity_max long",
-    )
-    observations = spark.createDataFrame(
-        [(s, tl, th, w, None, None, None, None) for s, tl, th, w in OBSERVATIONS],
-        "station_id string, temp_low double, temp_high double, wind_speed long, "
-        "wind_direction long, rain_amt double, snow_amt double, humidity long",
-    )
-    scored = score_entries(entries, choices, forecasts, observations)
-    scored.collect()
-    plan = _plan(scored)
-    # choices ⋈ forecast ⋈ observed must broadcast the weather dims; the
-    # final entries ⋈ per-entry join may legitimately shuffle at scale.
-    assert plan.count("BroadcastHashJoin") >= 2, plan
-
-
 def test_rollup_single_shuffle(spark):
     """suite q31: ROLLUP must plan as one Expand + one shuffle (partial →
     exchange → final hash agg), not one aggregation pass per grouping set."""

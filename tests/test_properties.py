@@ -12,7 +12,6 @@ from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
-from noaa_oracle_spark.operators.dedup import distinct_on
 from noaa_oracle_spark.operators.windows import carry_forward
 from noaa_oracle_spark.sql.rewriter import rewrite_duckdb_sql
 
@@ -32,28 +31,6 @@ rows_strategy = st.lists(
     min_size=1,
     max_size=25,
 )
-
-
-@SLOW
-@given(rows=rows_strategy)
-def test_distinct_on_matches_pandas(spark, rows):
-    """distinct_on(keys, order) ≡ pandas sort + groupby-first under the
-    same total order."""
-    uniq = [(k, o, v, i) for i, (k, o, v, _) in enumerate(rows)]
-    df = spark.createDataFrame(uniq, "k int, o int, v int, uid int")
-    got = {
-        (r["k"], r["o"], r["v"], r["uid"])
-        for r in distinct_on(
-            df, ["k"], [F.desc("o"), F.asc("uid")]
-        ).collect()
-    }
-    pdf = pd.DataFrame(uniq, columns=["k", "o", "v", "uid"])
-    pdf = pdf.sort_values(["k", "o", "uid"], ascending=[True, False, True])
-    exp = {
-        tuple(int(x) if pd.notna(x) else None for x in row)
-        for row in pdf.groupby("k").head(1).itertuples(index=False)
-    }
-    assert got == exp
 
 
 @SLOW

@@ -22,7 +22,13 @@ from noaa_oracle_spark import service
 from noaa_oracle_spark.queries import weather
 from noaa_oracle_spark.sources import reader
 from noaa_oracle_spark.sources.catalog import SnapshotCatalog, snapshot_path
-from tests.weather_fixtures import OBS_NEW_FIELDS, rfc
+from tests.weather_fixtures import (
+    MIX_D0,
+    MIX_STATIONS,
+    OBS_NEW_FIELDS,
+    rfc,
+    write_forecast_mix,
+)
 
 UTC = timezone.utc
 D0 = datetime(2026, 3, 1, tzinfo=UTC)
@@ -204,3 +210,20 @@ def test_each_request_answers_in_its_own_unit(spark, hourly_dir):
     assert f_low == pytest.approx(c_low * 9 / 5 + 32)
     assert f_high == pytest.approx(c_high * 9 / 5 + 32)
     assert temps("celsius") == (c_unit, c_low, c_high)
+
+
+def test_five_station_forecasts_run_in_two_jobs(spark, tmp_path):
+    """The forecast rollup is one grouped-map pass after one exchange:
+    a ±3 day read of five stations runs at most two Spark jobs."""
+    d = str(tmp_path)
+    write_forecast_mix(d, seed=3)
+    center = MIX_D0 + timedelta(days=1)
+    args = dict(station_ids=MIX_STATIONS[:5], start=center - timedelta(days=3),
+                end=center + timedelta(days=3),
+                generated_start=MIX_D0 - timedelta(days=1),
+                generated_end=MIX_D0 + timedelta(days=1))
+    sc = spark.sparkContext
+    with _job_group(sc) as jobs:
+        rows = service.forecasts_request(spark, d, **args).collect()
+        assert 1 <= len(jobs()) <= 2
+    assert {r["station_id"] for r in rows} == set(MIX_STATIONS[:5])

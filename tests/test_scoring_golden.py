@@ -82,39 +82,63 @@ OBSERVATIONS = [
 EXPECTED = {E1: (399900, 40), E2: (299800, 30), E3: (399700, 40), E4: (99600, 10)}
 
 
+CHOICE_COLUMNS = ("entry_id", "station", "temp_low", "temp_high", "wind_speed",
+                  "wind_direction", "rain_amt", "snow_amt", "humidity")
+
+
+def weather_values() -> tuple[dict, dict]:
+    """The mock forecasts and observations as per-station values; the
+    fields they leave out are NULL."""
+    forecasts = {
+        s: {"temp_low": tl, "temp_high": th, "wind_speed": w}
+        for s, tl, th, w in FORECASTS
+    }
+    observations = {
+        s: {"temp_low": tl, "temp_high": th, "wind_speed": w}
+        for s, tl, th, w in OBSERVATIONS
+    }
+    return forecasts, observations
+
+
 @pytest.fixture(scope="module")
-def scored(spark):
-    entries = spark.createDataFrame([(e,) for e in (E1, E2, E3, E4)], ["entry_id"])
-    choices = spark.createDataFrame(
-        CHOICES,
-        "entry_id string, station string, temp_low string, temp_high string, "
-        "wind_speed string, wind_direction string, rain_amt string, "
-        "snow_amt string, humidity string",
-    )
-    forecasts = spark.createDataFrame(
-        [
-            (s, tl, th, w, None, None, None, None)
-            for s, tl, th, w in FORECASTS
-        ],
-        "station_id string, temp_low long, temp_high long, wind_speed long, "
-        "wind_direction long, rain_amt double, snow_amt double, humidity_max long",
-    )
-    observations = spark.createDataFrame(
-        [
-            (s, tl, th, w, None, None, None, None)
-            for s, tl, th, w in OBSERVATIONS
-        ],
-        "station_id string, temp_low double, temp_high double, wind_speed long, "
-        "wind_direction long, rain_amt double, snow_amt double, humidity long",
-    )
+def scored():
+    choices = [dict(zip(CHOICE_COLUMNS, row)) for row in CHOICES]
+    out = score_entries([E1, E2, E3, E4], choices, *weather_values())
     return {
-        r["entry_id"]: (r["total_score"], r["base_score"])
-        for r in score_entries(entries, choices, forecasts, observations).collect()
+        r.entry_id: (r.total_score, r.base_score)
+        for r in out.itertuples(index=False)
     }
 
 
 def test_golden_scores(scored):
     assert scored == EXPECTED
+
+
+@pytest.mark.parametrize(
+    "field, forecast, observed, points",
+    [
+        # observed temperatures round half away from zero (f64::round)
+        ("temp_high", {"temp_high": 60}, {"temp_high": 60.5}, (10, 0, 0)),
+        ("temp_low", {"temp_low": -5}, {"temp_low": -4.5}, (0, 20, 0)),
+        ("temp_low", {}, {"temp_low": 3.0}, (0, 0, 0)),
+        ("wind_speed", {}, {"wind_speed": 0}, (0, 20, 0)),
+        # 350° vs 10°: 20° apart around the circle, raw degrees say under
+        ("wind_direction", {"wind_direction": 350}, {"wind_direction": 10},
+         (0, 20, 10)),
+        ("rain_amt", {}, {"rain_amt": 0.1}, (10, 20, 0)),
+        ("snow_amt", {"snow_amt": 1.0}, {"snow_amt": 0.4}, (0, 0, 10)),
+        ("humidity", {"humidity_max": 70}, {"humidity": 76}, (10, 0, 0)),
+    ],
+)
+def test_field_rules(field, forecast, observed, points):
+    """Each field's Over/Par/Under rule (oracle.rs:534-736): the base score
+    of an entry choosing over, par and under."""
+    ids = [uuid_v7_at(f"2024-08-11T00:00:00.{ms}Z") for ms in (101, 102, 103)]
+    choices = [{"entry_id": e, "station": "KXYZ", field: choice}
+               for e, choice in zip(ids, ("over", "par", "under"))]
+    out = score_entries(ids, choices, {"KXYZ": forecast}, {"KXYZ": observed},
+                        (field,))
+    assert tuple(out["base_score"]) == points
 
 
 def test_winner_selection(scored):

@@ -12,6 +12,7 @@ from datetime import datetime, timedelta, timezone
 
 import duckdb
 import pytest
+from pyspark.sql import types as T
 
 from noaa_oracle_spark.queries.weather import (
     daily_observations,
@@ -28,7 +29,11 @@ from noaa_oracle_spark.reference_sql import (
 from noaa_oracle_spark.sources.catalog import SnapshotCatalog
 from noaa_oracle_spark.sources.reader import read_snapshots
 from tests.weather_fixtures import (
+    MIX_D0,
+    MIX_SNAPSHOTS,
+    MIX_STATIONS,
     write_forecast_fixtures,
+    write_forecast_mix,
     write_observation_fixtures,
 )
 
@@ -194,3 +199,111 @@ def test_catalog_pruning_and_lookback(weather_dir):
         datetime(2027, 1, 2, tzinfo=UTC),
     )
     assert none == []
+
+
+# ---------------------------------------------------------------------------
+# forecasts over many stations: the seeded mix
+# ---------------------------------------------------------------------------
+
+MIX_CASES = [
+    # (start, end, generated_start, generated_end, snapshots read)
+    (MIX_D0, MIX_D0 + timedelta(days=3),
+     MIX_D0 - timedelta(days=1), MIX_D0 + timedelta(days=1), 3),
+    (MIX_D0, MIX_D0 + timedelta(days=1),
+     MIX_D0 - timedelta(days=1), MIX_D0 + timedelta(days=1), 3),
+    # without the last snapshot an older one wins. (It is left unread, not
+    # cut by the generated range: DuckDB's answer over three files with
+    # generated_end = MIX_D0 loses ice rows it keeps over the first two.)
+    (MIX_D0, MIX_D0 + timedelta(days=2),
+     MIX_D0 - timedelta(days=1), MIX_D0 + timedelta(days=1), 2),
+]
+
+
+def _z(dt: datetime) -> str:
+    return dt.strftime("%Y-%m-%dT%H:%M:%SZ")
+
+
+def _in_unit(row: dict, unit: str) -> dict:
+    """The reference's post-decode temperature conversion
+    (weather_data.rs:1234-1262) applied to one DuckDB row."""
+    row = dict(row)
+    code = (row["temperature_unit_code"] or "").lower().replace("celcius", "celsius")
+    for k in ("temp_low", "temp_high"):
+        v = row[k]
+        if v is None:
+            continue
+        if unit == "fahrenheit" and code == "celsius":
+            row[k] = v * 9.0 / 5.0 + 32.0
+        elif unit == "celsius" and code == "fahrenheit":
+            row[k] = (v - 32.0) * 5.0 / 9.0
+    row["temperature_unit_code"] = unit
+    return row
+
+
+@pytest.fixture(scope="module")
+def forecast_mix(spark, tmp_path_factory):
+    d = str(tmp_path_factory.mktemp("forecast_mix"))
+    assert len(write_forecast_mix(d, seed=7)) == len(MIX_SNAPSHOTS)
+    return d
+
+
+@pytest.mark.parametrize("unit", ["celsius", "fahrenheit"])
+def test_forecast_mix_matches_reference(spark, forecast_mix, unit):
+    """Twenty-four stations, three overlapping snapshots (one old 23-column
+    file), every duration rule: the engine's rows equal DuckDB running the
+    reference SQL, with and without a station filter."""
+    cat = SnapshotCatalog(forecast_mix)
+    some = MIX_STATIONS[::5]
+    for start, end, gs, ge, n_read in MIX_CASES:
+        paths = cat.list_paths("forecasts", start, end)
+        assert len(paths) == len(MIX_SNAPSHOTS)
+        paths = paths[:n_read]
+        res = duckdb.connect().execute(
+            forecasts_data_sql(paths, _z(start), _z(end), _z(gs), _z(ge)))
+        cols = [c[0] for c in res.description]
+        want = [_in_unit(dict(zip(cols, r)), unit) for r in res.fetchall()]
+        assert len({r["station_id"] for r in want}) == len(MIX_STATIONS)
+        fc = read_snapshots(spark, paths, "forecasts")
+        for stations in (None, some):
+            out = forecasts_data(fc, stations, start, end, gs, ge,
+                                 temperature_unit=unit)
+            rows = [r for r in want
+                    if stations is None or r["station_id"] in stations]
+            assert normalize([tuple(r) for r in out.collect()], out.columns) \
+                == normalize([tuple(r[c] for c in cols) for r in rows], cols)
+
+
+def _schema(temps: T.DataType, unit_nullable: bool) -> T.StructType:
+    f = T.StructField
+    return T.StructType([
+        f("station_id", T.StringType(), True),
+        f("date", T.StringType(), True),
+        f("start_time", T.StringType(), False),
+        f("end_time", T.StringType(), False),
+        f("temp_low", temps, True),
+        f("temp_high", temps, True),
+        f("wind_speed", T.LongType(), True),
+        f("wind_direction", T.LongType(), True),
+        f("humidity_max", T.LongType(), True),
+        f("humidity_min", T.LongType(), True),
+        f("temperature_unit_code", T.StringType(), unit_nullable),
+        f("precip_chance", T.DoubleType(), True),
+        f("rain_amt", T.DoubleType(), False),
+        f("snow_amt", T.DoubleType(), True),
+        f("ice_amt", T.DoubleType(), True),
+    ])
+
+
+def test_forecasts_data_schema_is_pinned(spark, forecast_mix):
+    """Names, order, types and nullability of a windowed forecast read: the
+    JSON rows tell 5 from 5.0 even where the parity normalizer does not."""
+    start, end, gs, ge, _ = MIX_CASES[0]
+    fc = read_snapshots(
+        spark, SnapshotCatalog(forecast_mix).list_paths("forecasts", start, end),
+        "forecasts")
+    assert forecasts_data(fc, None, start, end, gs, ge).schema == _schema(
+        T.LongType(), True)
+    for unit in ("celsius", "fahrenheit"):
+        assert forecasts_data(
+            fc, None, start, end, gs, ge, temperature_unit=unit
+        ).schema == _schema(T.DoubleType(), False)

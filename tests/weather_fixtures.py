@@ -17,6 +17,7 @@ non-UTC offsets for the same instants (UTC-normalized dedup/bucketing).
 from __future__ import annotations
 
 import os
+import random
 from datetime import datetime, timedelta, timezone
 
 import pyarrow as pa
@@ -287,3 +288,97 @@ def write_forecast_fixtures(data_dir: str) -> list[str]:
     _write(p1, new1_rows, FCST_NEW_FIELDS)
     _write(p2, new2_rows, FCST_NEW_FIELDS)
     return [p_old, p1, p2]
+
+
+# ---------------------------------------------------------------------------
+# seeded multi-station forecast mix
+# ---------------------------------------------------------------------------
+
+MIX_D0 = datetime(2026, 2, 10, tzinfo=UTC)
+MIX_STATIONS = [f"KM{i:02d}" for i in range(24)]
+#: (generated hour after MIX_D0, columns): the first snapshot is an old
+#: 23-column file (no snow/ice columns, no elevation_m). A generated range
+#: ending at MIX_D0 keeps all but the last; request edges fall on
+#: midnights, where DuckDB's text comparison of RFC3339 strings (see
+#: test_duckdb_string_pushdown_divergence) agrees with instant order.
+MIX_SNAPSHOTS = ((-20, 23), (-4, 30), (5, 30))
+_MIX_23_FIELDS = [f for f in FCST_OLD_FIELDS if f[0] != "elevation_m"]
+
+
+def _mix_windows(rng, station_idx: int) -> list[tuple[int, int]]:
+    """(begin hour, duration h) windows of one station in one snapshot over
+    three days. Station patterns by index: chained 6 h days beside gapped
+    12 h rows (the chain ratio decides), single rows at 6/12/24 h (no
+    duration has two rows: the shortest-duration fallback decides), and a
+    random broken mix of 3/6/12/24 h grid windows."""
+    out = set()
+    for day in range(3):
+        h0 = 24 * day
+        kind = station_idx % 3
+        if kind == 0:
+            out |= {(h0 + h, 6) for h in range(0, 24, 6) if rng.random() < 0.85}
+            out |= {(h0 + h, 12) for h in (0, 14) if rng.random() < 0.7}
+            out |= {(h0 + h, 3) for h in (0, 3, 9, 12) if rng.random() < 0.5}
+        elif kind == 1:
+            out |= {(h0 + rng.choice((0, 6, 12)), 6), (h0 + 12, 12), (h0, 24)}
+        else:
+            for dur in (3, 6, 12, 24):
+                out |= {(h0 + h, dur) for h in range(0, 24, dur)
+                        if rng.random() < 0.45}
+    return sorted(out)
+
+
+def _mix_row(rng, station: str, gen_h: int, beg_h: int, dur_h: int) -> dict:
+    def maybe(p, value):
+        return None if rng.random() < p else value
+
+    def wild(p, value, bad):
+        return bad if rng.random() < p else value
+
+    beg = MIX_D0 + timedelta(hours=beg_h)
+    # a -05:00 rendering of the same instants, away from every request
+    # window's edges (DuckDB compares such strings as text)
+    offset = -5 if beg_h % 24 == 12 and rng.random() < 0.3 else 0
+    qpf = maybe(0.35, wild(0.1, round(rng.random() * 0.5, 2), -0.2))
+    return _fc_row(
+        station, gen_h, beg_h, dur_h,
+        generated_at=rfc(MIX_D0 + timedelta(hours=gen_h)),
+        temperature_unit_code=(
+            "celcius" if int(station[2:]) % 4 == 3 else "fahrenheit"),
+        begin_time=rfc(beg, offset),
+        end_time=rfc(beg + timedelta(hours=dur_h), offset),
+        max_temp=maybe(0.05, wild(0.08, rng.randint(40, 90), 250)),
+        min_temp=maybe(0.05, wild(0.08, rng.randint(0, 39), -300)),
+        wind_speed=maybe(0.1, wild(0.08, rng.randint(0, 40), 700)),
+        wind_direction=maybe(0.1, wild(0.08, rng.randint(0, 360), 400)),
+        relative_humidity_max=maybe(0.1, wild(0.08, rng.randint(50, 100), 120)),
+        relative_humidity_min=maybe(0.1, wild(0.08, rng.randint(0, 49), -5)),
+        twelve_hour_probability_of_precipitation=maybe(0.3, rng.randint(0, 100)),
+        liquid_precipitation_amt=qpf,
+        snow_amt=maybe(0.6, wild(0.1, round(rng.random() * 2, 2), -1.0)),
+        snow_ratio=maybe(0.3, rng.choice((0.0, 5.0, 8.5, 12.0))),
+        ice_amt=maybe(0.7, round(rng.random() * 0.2, 2)),
+    )
+
+
+def write_forecast_mix(data_dir: str, seed: int) -> list[str]:
+    """Three forecast snapshots of `MIX_STATIONS` whose windows overlap
+    (the latest generated_at wins), with mixed 3/6/12/24 h durations and
+    broken chains, NULL precip fields, out-of-range temperatures, wind and
+    humidities, and one old 23-column file."""
+    rng = random.Random(seed)
+    paths = []
+    for gen_h, n_cols in MIX_SNAPSHOTS:
+        rows = [
+            _mix_row(rng, station, gen_h, beg_h, dur_h)
+            for i, station in enumerate(MIX_STATIONS)
+            for beg_h, dur_h in _mix_windows(rng, i)
+        ]
+        at = MIX_D0 + timedelta(hours=gen_h, minutes=30)
+        path = os.path.join(
+            data_dir, at.date().isoformat(),
+            f"forecasts_{at.strftime('%Y-%m-%dT%H_%M_%S')}+00_00.parquet",
+        )
+        _write(path, rows, _MIX_23_FIELDS if n_cols == 23 else FCST_NEW_FIELDS)
+        paths.append(path)
+    return paths
